@@ -449,24 +449,12 @@ object Dedup {
     // mining passes. Semantics are identical by construction: the same
     // min-id union-find, contaminated components dropped whole, clean
     // components keep their minimum member. Over-budget pair lists take
-    // the distributed path unchanged.
-    val driverMax = math.max(0L, driverMaxEdges)
-    val probeLimit = math.min(driverMax + 1, Int.MaxValue.toLong).toInt
-    if (pairs.limit(probeLimit).count() <= driverMax) {
+    // the distributed path unchanged, and so do id types the driver
+    // cannot order like Spark ([[fitsDriver]]).
+    if (fitsDriver(pairs, driverMaxEdges)) {
       val collected = pairs.select(col("id_a"), col("id_b"), col("in_corpus"))
-        .limit(probeLimit).collect()
-      val idType = pairs.schema("id_a").dataType
-      val parent = scala.collection.mutable.HashMap[Any, Any]()
-      def find(x: Any): Any = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x // path compression
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      // Spark-parity ordering (UTF8String binary order for strings) so
-      // which member survives never depends on which dispatch path ran
-      def lt(a: Any, b: Any): Boolean = graft.DriverOrdering.lt(idType, a, b)
+        .collect()
+      val uf = new MinIdUnionFind(pairs.schema("id_a").dataType)
       val corpusMatched = scala.collection.mutable.HashSet[Any]()
       val members = scala.collection.mutable.HashSet[Any]()
       collected.foreach { row =>
@@ -478,18 +466,15 @@ object Dedup {
         else if (row.getBoolean(2)) corpusMatched += a
         else {
           members += a; members += b
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) { // min id becomes the root = the component label
-            if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb
-          }
+          uf.union(a, b)
         }
       }
       val contam = scala.collection.mutable.HashSet[Any]()
-      corpusMatched.foreach(id => if (members.contains(id)) contam += find(id))
+      corpusMatched.foreach(id => if (members.contains(id)) contam += uf.find(id))
       val losers = scala.collection.mutable.HashSet[Any]()
       losers ++= corpusMatched
       members.foreach { id =>
-        val root = find(id)
+        val root = uf.find(id)
         if (contam.contains(root) || id != root) losers += id
       }
       if (releasePairs) release(pairs)
@@ -521,8 +506,10 @@ object Dedup {
         .filter(col("id") =!= col("component")).select(col("id")))
     val losers = corpusMatched.unionByName(compLosers).distinct()
       .localCheckpoint() // small: duplicate ids only
-    release(comps)
-    if (releasePairs) release(pairs)
+    // comps' self-pair leg reads the caller's `pairs`, whose blocks only
+    // `releasePairs` may drop
+    if (releasePairs) { release(comps); release(pairs) }
+    else releaseExcept(comps, pairs)
     batch.join(losers, batch(idCol) === losers("id"), "left_anti")
   }
 
@@ -643,7 +630,7 @@ object Dedup {
    * [[minhashPairsIncremental]]'s, spec-pinned.
    *
    * `maxProbeKeys` bounds both driver-side key sets (the
-   * `Merge.probeMaxKeys` discipline); a batch over the bound fails
+   * `MergeInto.ProbeMaxKeys` discipline); a batch over the bound fails
    * loudly — split the batch rather than silently degrading.
    */
   def minhashPairsIncrementalIndexed(
@@ -657,7 +644,21 @@ object Dedup {
       bands: Int = 16,
       minEst: Double = 0.5,
       seed: Long = TextHash.DefaultSeed,
-      maxProbeKeys: Int = 1 << 20): DataFrame = {
+      maxProbeKeys: Int = 1 << 20): DataFrame =
+    indexedPairs(bandTable, sigTable, batch, idCol, textCol, shingleSize,
+      numHashes, bands, minEst, seed, maxProbeKeys, BroadcastMaxRows)
+
+  /** Counted batch-row budget under which [[minhashPairsIncrementalIndexed]]
+   *  broadcasts the batch side of its band and confirmation joins. */
+  private[graft] val BroadcastMaxRows = 1L << 20
+
+  /** [[minhashPairsIncrementalIndexed]] with its broadcast budget as an
+   *  argument, so tests can force the un-hinted joins. */
+  private[graft] def indexedPairs(
+      bandTable: graft.tables.SnapshotTable, sigTable: graft.tables.SnapshotTable,
+      batch: DataFrame, idCol: String, textCol: String, shingleSize: Int,
+      numHashes: Int, bands: Int, minEst: Double, seed: Long,
+      maxProbeKeys: Int, broadcastMaxRows: Long): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     // refuse a geometry mismatch against what the index was BUILT with
     // ([[buildMinhashIndexTables]] pins it in the table properties): e.g.
@@ -698,10 +699,8 @@ object Dedup {
     }
     val bsigs = minhashSignatures(batch, idCol, textCol, shingleSize, numHashes, seed)
       .localCheckpoint()
-    val hintMaxRows = batch.sparkSession.conf
-      .get("spark.graft.dedup.broadcastMaxRows", (1L << 20).toString).toLong
     def maybeBroadcast(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= hintMaxRows) broadcast(df) else df
+      if (rows <= broadcastMaxRows) broadcast(df) else df
     // bBands derives from the PINNED signatures by a pure projection
     // (posexplode over sig slices) — recomputing it per consumer is
     // cheaper than the extra materialization job a second checkpoint
@@ -1178,19 +1177,30 @@ object Dedup {
   def connectedComponents(
       pairs: DataFrame,
       maxIter: Int = 25,
-      driverMaxEdges: Long = 1L << 20): DataFrame = {
-    val probeLimit = math.min(driverMaxEdges + 1, Int.MaxValue.toLong).toInt
-    if (pairs.limit(probeLimit).count() <= driverMaxEdges) driverComponents(pairs)
+      driverMaxEdges: Long = 1L << 20): DataFrame =
+    if (fitsDriver(pairs, driverMaxEdges)) driverComponents(pairs)
     else propagateComponents(pairs, maxIter)
-  }
 
-  /** Driver-side union-find closure for small pair graphs (ids must be
-   *  Comparable — integral/string key types all are). */
-  private def driverComponents(pairs: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    val idField = pairs.schema("id_a")
-    val edges = pairs.select(col("id_a"), col("id_b")).collect()
-    val parent = scala.collection.mutable.HashMap[Any, Any]()
+  /** Driver dispatch gate shared by [[connectedComponents]] and
+   *  [[dedupIncrementalFromPairs]]: the id type must be
+   *  [[graft.DriverOrdering.orderable]] and the pair list at most
+   *  `driverMaxEdges` rows (the probe stops at `driverMaxEdges + 1`).
+   *  Doubles fail the first test — Spark equates -0.0 and 0.0 in keys
+   *  while driver equality does not — and so do binaries, which have
+   *  neither JVM ordering nor value equality. */
+  private def fitsDriver(pairs: DataFrame, driverMaxEdges: Long): Boolean =
+    graft.DriverOrdering.orderable(pairs.schema("id_a").dataType) && {
+      val max = math.max(0L, driverMaxEdges)
+      pairs.limit(math.min(max + 1, Int.MaxValue.toLong).toInt).count() <= max
+    }
+
+  /** Driver-side union-find whose root is each set's minimum id under
+   *  [[graft.DriverOrdering]] (UTF8String binary order for strings) — the
+   *  label the distributed path computes with `least`/`min`, so which id
+   *  labels a component never depends on the dispatch. Only for
+   *  orderable id types ([[fitsDriver]]). */
+  private final class MinIdUnionFind(idType: org.apache.spark.sql.types.DataType) {
+    private val parent = scala.collection.mutable.HashMap[Any, Any]()
     def find(x: Any): Any = {
       var r = x
       while (parent.getOrElse(r, r) != r) r = parent(r)
@@ -1198,20 +1208,24 @@ object Dedup {
       while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    // Spark-parity ordering ([[graft.DriverOrdering]] — UTF8String binary
-    // order for strings): the distributed path labels components via
-    // `least`/`min`, and which id wins must not depend on the dispatch
-    // (Java UTF-16 compareTo disagrees beyond the BMP)
-    def lt(a: Any, b: Any): Boolean = graft.DriverOrdering.lt(idField.dataType, a, b)
-    edges.foreach { row =>
-      val (a, b) = (row.get(0), row.get(1))
+    def union(a: Any, b: Any): Unit = {
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { // min id becomes the root, so root == component label
-        if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb
+      if (ra != rb) {
+        if (graft.DriverOrdering.lt(idType, ra, rb)) parent(rb) = ra else parent(ra) = rb
       }
     }
+  }
+
+  /** Driver-side union-find closure for small pair graphs of orderable
+   *  ids. */
+  private def driverComponents(pairs: DataFrame): DataFrame = {
+    val spark = pairs.sparkSession
+    val idField = pairs.schema("id_a")
+    val edges = pairs.select(col("id_a"), col("id_b")).collect()
+    val uf = new MinIdUnionFind(idField.dataType)
+    edges.foreach(row => uf.union(row.get(0), row.get(1)))
     val ids = edges.flatMap(r => Seq(r.get(0), r.get(1))).distinct
-    val labels = ids.map(id => org.apache.spark.sql.Row(id, find(id)))
+    val labels = ids.map(id => org.apache.spark.sql.Row(id, uf.find(id)))
     spark.createDataFrame(
       spark.sparkContext.parallelize(labels.toSeq, math.max(1, labels.length / 100000)),
       StructType(Seq(
@@ -1319,10 +1333,17 @@ object Dedup {
    * `localCheckpoint()` for `checkpoint()`; for the bounded per-operator
    * lifetimes here, the restart cost is the documented tradeoff.
    */
-  def release(ds: DataFrame): Unit =
-    ds.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
+  def release(ds: DataFrame): Unit = leafRdds(ds).foreach(_.unpersist(false))
+
+  /** [[release]] `ds` except the blocks `keep` also reads. */
+  private def releaseExcept(ds: DataFrame, keep: DataFrame): Unit = {
+    val kept = leafRdds(keep).map(_.id).toSet
+    leafRdds(ds).filterNot(r => kept(r.id)).foreach(_.unpersist(false))
+  }
+
+  private def leafRdds(ds: DataFrame) =
+    ds.queryExecution.analyzed.collectLeaves().collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }
 
   /**

@@ -152,19 +152,6 @@ final class MergeInto(
     val allFiles = table.manifest()
     val targetAll = table.read()
     val srcExists = source.withColumn(S_EXISTS, lit(true)).alias("s")
-    // set once discovery proves the source fits the driver key budget
-    // AND its estimated bytes fit the broadcast budget — gates the
-    // broadcast hints on the discovery and rewrite joins. The row bound
-    // alone is not enough: probeMaxKeys rows of a WIDE source (blob
-    // columns) could exceed broadcast/driver memory where the shuffle
-    // join worked, so rows × schema default width must also fit
-    // spark.graft.merge.broadcastMaxBytes (estimate, not exact — the
-    // budget's default leaves a wide margin under Spark's 8 GB cap).
-    val broadcastMaxBytes = spark.conf
-      .get("spark.graft.merge.broadcastMaxBytes", (256L * 1024 * 1024).toString).toLong
-    val sourceRowWidth = math.max(1L,
-      source.schema.fields.map(_.dataType.defaultSize.toLong).sum)
-    var sourceKnownSmall = false
 
     // Route each joined row to the index of the first applicable clause;
     // -1 = keep target row as-is; -2 = drop (no-op insert / delete).
@@ -251,13 +238,22 @@ final class MergeInto(
         // files whose [min,max] key range cannot overlap the source's key
         // bounds can be skipped before the join even plans — a small
         // staged batch merged into a huge clustered table only opens the
-        // overlapping files (for a sub-`probeMaxKeys` source the bounds,
+        // overlapping files (for a sub-`ProbeMaxKeys` source the bounds,
         // keys and candidate files all derive from ONE bounded driver
         // collect; bigger sources pay one tiny agg job).
         val ((candidateFiles, bounds), smallTotal) =
           discoveryCandidatesSized(table, source, condition, allFiles)
-        if (smallTotal.exists(_ * sourceRowWidth <= broadcastMaxBytes))
-          sourceKnownSmall = true
+        // set when discovery proved the source fits the driver key budget
+        // AND its estimated bytes fit BroadcastMaxBytes. The row bound
+        // alone is not enough: ProbeMaxKeys rows of a WIDE source (blob
+        // columns) could exceed broadcast/driver memory where the shuffle
+        // join worked, so rows × schema default width must also fit
+        // (an estimate, not exact — the budget leaves a wide margin under
+        // Spark's 8 GB broadcast cap).
+        val sourceRowWidth = math.max(1L,
+          source.schema.fields.map(_.dataType.defaultSize.toLong).sum)
+        val sourceKnownSmall =
+          smallTotal.exists(_ * sourceRowWidth <= BroadcastMaxBytes)
         // lineage captured inside the table read: on a DV-bearing table
         // the scan carries an anti-join, under which input_file_name()
         // would come back empty and discovery would touch nothing
@@ -321,16 +317,15 @@ final class MergeInto(
       else {
         // kept copies of one target row are identical on every projected
         // (target) column — keep exactly one per T_UID. Insert-routed
-        // rows (full-outer path only) carry NULL T_UID: ranking them on
-        // the raw key would hash every insert into ONE window partition
+        // rows carry NULL T_UID: ranking them on the raw key would hash
+        // every insert into ONE window partition
         // (a single-reducer funnel for insert-heavy bySource-only
         // merges), while a filter/union split of matched vs unmatched
         // would execute the full-outer-join subtree twice. Instead give
         // each insert row a unique NEGATIVE surrogate key (target UIDs
         // are non-negative monotonically_increasing_id values, so the
         // spaces are disjoint) — one window pass, one join,
-        // hash-distributed. On the split path every row has a T_UID and
-        // the surrogate branch is structurally dead.
+        // hash-distributed.
         val surrogate = monotonically_increasing_id() + lit(Long.MinValue)
         routed
           .withColumn("__keep_key", coalesce(col(T_UID), surrogate))
@@ -362,93 +357,12 @@ final class MergeInto(
       }.as(name)
     }
 
-    // The split pays when it avoids shuffling the touched files' rows;
-    // below `spark.graft.merge.splitMinTargetBytes` of touched data the
-    // avoided exchange is smaller than the split's extra anti-join leg
-    // (one more narrow-key scan of the touched files plus a broadcast
-    // build), so small merges keep the one-join full-outer plan. The
-    // default (256 MB, one advisory-partition-sized exchange) makes the
-    // split engage exactly where the shuffle it removes starts to
-    // matter; at the 100 TB design point any real merge clears it.
-    val splitMinBytes = spark.conf
-      .get("spark.graft.merge.splitMinTargetBytes", (256L * 1024 * 1024).toString).toLong
-    val touchedBytes = {
-      val ts = touched.toSet
-      table.manifestEntries().iterator
-        .filter(e => ts(e.path)).map(_.bytes).sum // commit metadata, no I/O
-    }
-    val splitRewrite = sourceKnownSmall && touchedBytes >= splitMinBytes &&
-      spark.conf.get("spark.graft.merge.splitRewrite", "true").toBoolean
-    val result: DataFrame =
-      if (splitRewrite) {
-        // ---- split rewrite (guide §3.1 — broadcast the provably small
-        // side; the Delta "low-shuffle merge" shape). A FULL OUTER join
-        // cannot broadcast either side, so a small source still forced a
-        // shuffle + sort of every touched file's rows. Decompose it into
-        // the two row classes it actually produces:
-        //   leg 1 — touched-target rows with their matches:
-        //     t LEFT OUTER JOIN broadcast(s); matched rows route through
-        //     the Matched chain, unmatched target rows through
-        //     NotMatchedBySource/KEEP — identical routing expressions,
-        //     with the sourceOnly branch structurally dead. The touched
-        //     rows never shuffle: the write job is scan → BHJ → project.
-        //   leg 2 — source-only inserts: s LEFT ANTI JOIN the touched
-        //     rows, projected to ONLY the columns the merge condition
-        //     references (column-pruned second scan — the anti join
-        //     moves narrow keys, never full rows). A source row matching
-        //     ANY target row matches inside the touched files by
-        //     discovery's definition, so anti-against-touched ≡
-        //     anti-against-table.
-        // Union of the two legs ≡ the full-outer routing by case
-        // analysis (matched / target-only / source-only), pinned by
-        // MergeSpec's split-vs-full-outer parity test. Gated on the same
-        // proven-small bound as the discovery broadcast; big sources
-        // keep the full-outer shuffle join unchanged.
-        val leg1 = lockSchema(routeTarget(
-          t.join(broadcast(srcExists), condition, "left_outer"))
-          .select(targetCols.map(outCol): _*))
-        if (!clauses.exists(_.kind == NotMatched)) leg1
-        else {
-          // session-aware unique resolution (pickName: exact spelling
-          // first, else a UNIQUE case-insensitive match) — a first-match
-          // find could project the case-SIBLING of a condition column
-          // and break (or silently re-key) the anti leg; any unresolved
-          // name falls back to the full-width projection, which is
-          // always sufficient
-          val tCond = conditionTargetCols(condition) match {
-            case Some(names) =>
-              val resolved = names.flatMap(n =>
-                graft.tables.SnapshotTable.pickName(
-                  touchedDf.columns.toSeq, n))
-              if (resolved.size == names.size && resolved.nonEmpty)
-                touchedDf.select(resolved.map(col): _*)
-              else touchedDf
-            case None => touchedDf
-          }
-          val unmatched = srcExists.join(tCond.alias("t"), condition, "left_anti")
-            .withColumn(ACTION, firstClause(NotMatched, lit(true), DROP))
-            .filter(col(ACTION) =!= DROP)
-          def insCol(name: String): Column =
-            clauses.zipWithIndex.filter(_._1.kind == NotMatched)
-              .foldLeft(lit(null): Column) { case (acc, (cl, idx)) =>
-                val v = cl.action match {
-                  case InsertAll =>
-                    if (sourceCols.contains(name.toLowerCase)) col(s"s.$name") else lit(null)
-                  case InsertValues(vals) => MergeInto.ciGet(vals, name).getOrElse(lit(null))
-                  case _ => acc
-                }
-                when(col(ACTION) === idx, v).otherwise(acc)
-              }.as(name)
-          leg1.unionByName(lockSchema(unmatched.select(targetCols.map(insCol): _*)))
-        }
-      } else {
-        // no broadcast hint here: Spark's BroadcastHashJoin cannot build
-        // either side of a FULL OUTER join (the hint would only log a
-        // planner warning per commit) — the rewrite join stays a shuffle
-        // join over the touched files' rows, which AQE right-sizes
-        lockSchema(routeTarget(t.join(srcExists, condition, "full_outer"))
-          .select(targetCols.map(outCol): _*))
-      }
+    // no broadcast hint here: Spark's BroadcastHashJoin cannot build
+    // either side of a FULL OUTER join (the hint would only log a
+    // planner warning per commit) — the rewrite join stays a shuffle
+    // join over the touched files' rows, which AQE right-sizes
+    val result = lockSchema(routeTarget(t.join(srcExists, condition, "full_outer"))
+      .select(targetCols.map(outCol): _*))
     table.replaceFiles(untouched, result, actionTag,
       expectVersion = Some(snapshotVersion), rebasePredicate = rebaseBounds)
   }
@@ -462,6 +376,16 @@ object MergeInto {
   private[ops] val ACTION = "__action"
   private[ops] val KEEP = -1
   private[ops] val DROP = -2
+
+  /** Driver key budget of merge discovery: a source of at most this many
+   *  rows is collected for its key stats, and at most this many distinct
+   *  keys probe the manifest ([[keyProbedCandidates]]). Scalar keys, so
+   *  ≲ a few MB on the driver. */
+  private[ops] val ProbeMaxKeys = 100000
+
+  /** Estimated source bytes under which the discovery join broadcasts
+   *  a source already proven to fit [[ProbeMaxKeys]]. */
+  private[ops] val BroadcastMaxBytes = 256L * 1024 * 1024
 
   /**
    * Target files that can possibly contain a source match, per the
@@ -486,19 +410,19 @@ object MergeInto {
     discoveryCandidatesSized(table, source, condition, allFiles)._1
 
   /** [[discoveryCandidates]] plus `Some(rowCount)` when the source proved
-   *  SMALL (≤ `spark.graft.merge.probeMaxKeys` rows) — the caller's cue
-   *  that broadcasting the source side of the discovery/rewrite joins is
-   *  safe (the key set already sat on the driver). */
+   *  SMALL (≤ `maxKeys` rows) — the caller's cue that broadcasting the
+   *  source side of the discovery join is safe (the key set already sat
+   *  on the driver). `maxKeys` is [[ProbeMaxKeys]] except in tests that
+   *  force the agg path. */
   private[ops] def discoveryCandidatesSized(
       table: SnapshotTable,
       source: DataFrame,
       condition: Column,
-      allFiles: Seq[String]): ((Seq[String], Option[Column]), Option[Long])
+      allFiles: Seq[String],
+      maxKeys: Int = ProbeMaxKeys): ((Seq[String], Option[Column]), Option[Long])
     = SnapshotTable.commitPhases.timed("discovery") {
     val pairs = equiPairs(org.apache.spark.sql.graftshim.SparkInternals.expr(condition))
     if (pairs.isEmpty) return ((allFiles, None), None)
-    val maxKeys = source.sparkSession.conf
-      .get("spark.graft.merge.probeMaxKeys", "100000").toInt
     // ---- small-source fast path: ONE bounded collect of the key columns
     // replaces the min/max/ndv agg job AND the key-probe distinct-collect
     // job (the reference's steady state is a ~10³-row staged batch merged
@@ -523,7 +447,7 @@ object MergeInto {
             allFiles.filter(pruned.contains)
         }
         val probed =
-          if (ranged.isEmpty || maxKeys <= 0) ranged
+          if (ranged.isEmpty) ranged
           else pairs.zipWithIndex.find { case ((_, _, nullSafe), i) =>
             (!nullSafe || stats(i).nonNull == total) && stats(i).keys.nonEmpty
           } match {
@@ -556,7 +480,7 @@ object MergeInto {
         val pruned = table.prunedManifest(b).toSet
         allFiles.filter(pruned.contains)
     }
-    ((keyProbedCandidates(table, source, row, total, pairs, ranged), bounds), None)
+    ((keyProbedCandidates(table, source, row, total, pairs, ranged, maxKeys), bounds), None)
   }
 
   /** Per-pair driver-side source-key stats: non-null count, exact
@@ -566,18 +490,21 @@ object MergeInto {
 
   /** Collect the source's key columns when they fit the driver budget
    *  (≤ maxKeys rows) and every key type is one whose driver-side
-   *  ordering provably matches Spark's (`driverCompare`). None = fall
-   *  back to the distributed agg. */
+   *  ordering provably matches Spark's ([[graft.DriverOrdering]] — the
+   *  min/max derived here must bound exactly what `min(col)`/`max(col)`
+   *  would). Float/double keys are excluded: Spark equates -0.0 and 0.0
+   *  where a driver collect keeps the sign bit, so a driver-derived key
+   *  set could unsoundly prune SQL-equal matches. None = fall back to
+   *  the distributed agg. */
   private def smallSourceStats(
       source: DataFrame,
       pairs: Seq[(String, String, Boolean)],
       maxKeys: Int): Option[(Long, Seq[KeyStats])] = {
-    if (maxKeys <= 0) return None
     val projected =
       try source.select(pairs.map(p => col(p._2)): _*)
       catch { case scala.util.control.NonFatal(_) => return None }
     val types = projected.schema.fields.map(_.dataType)
-    if (!types.forall(driverOrderable)) return None
+    if (!types.forall(graft.DriverOrdering.orderable)) return None
     val rows = projected.limit(maxKeys + 1).collect()
     if (rows.length > maxKeys) return None
     val stats = pairs.indices.map { i =>
@@ -591,29 +518,14 @@ object MergeInto {
         if (v != null) {
           nonNull += 1
           distinct += v
-          if (mn == null || driverCompare(dt, v, mn) < 0) mn = v
-          if (mx == null || driverCompare(dt, v, mx) > 0) mx = v
+          if (mn == null || graft.DriverOrdering.lt(dt, v, mn)) mn = v
+          if (mx == null || graft.DriverOrdering.lt(dt, mx, v)) mx = v
         }
       }
       KeyStats(nonNull, distinct.toSeq, mn, mx)
     }
     Some((rows.length.toLong, stats))
   }
-
-  /** Key types whose JVM-side ordering matches Spark's expression
-   *  ordering (the min/max derived on the driver must bound exactly what
-   *  `min(col)`/`max(col)` would have) — the shared [[graft.DriverOrdering]]
-   *  definition, which also excludes FloatType/DoubleType: Spark
-   *  normalizes -0.0 to 0.0 in distinct/grouping keys while a raw driver
-   *  collect keeps the sign bit, so a float key set derived here could
-   *  unsoundly prune files holding SQL-equal (-0.0 = 0.0) matches.
-   *  Float-keyed sources fall back to the distributed agg path. */
-  private def driverOrderable(dt: org.apache.spark.sql.types.DataType): Boolean =
-    graft.DriverOrdering.orderable(dt)
-
-  private def driverCompare(
-      dt: org.apache.spark.sql.types.DataType, a: Any, b: Any): Int =
-    graft.DriverOrdering.compare(dt, a, b)
 
   /** Per-KEY refinement of the range-pruned candidate set — the Hudi
    *  bloom-index tagging role (`hoodie.index.type=BLOOM`). The global
@@ -623,10 +535,10 @@ object MergeInto {
    *  stats range and, where the table carries manifest blooms
    *  ([[graft.tables.FileBloom]]), files whose key range fully overlaps
    *  (interleaved clustering). Only runs when the source's approximate
-   *  key cardinality fits `spark.graft.merge.probeMaxKeys` (default
-   *  100 000 — a bounded, documented driver collect; keys are scalar, so
-   *  ≲ a few MB), which is also when pruning pays: a source touching
-   *  millions of distinct keys touches most files anyway. Skipped for
+   *  key cardinality fits `maxKeys` ([[ProbeMaxKeys]] — a bounded driver
+   *  collect; keys are scalar, so ≲ a few MB), which is also when
+   *  pruning pays: a source touching millions of distinct keys touches
+   *  most files anyway. Skipped for
    *  null-safe pairs with null keys (`<=>` can match NULL, which no
    *  key probe represents); conservative on any miss. */
   private def keyProbedCandidates(
@@ -635,11 +547,9 @@ object MergeInto {
       row: org.apache.spark.sql.Row,
       total: Long,
       pairs: Seq[(String, String, Boolean)],
-      ranged: Seq[String]): Seq[String] = {
+      ranged: Seq[String],
+      maxKeys: Int): Seq[String] = {
     if (ranged.isEmpty) return ranged
-    val maxKeys = source.sparkSession.conf
-      .get("spark.graft.merge.probeMaxKeys", "100000").toInt
-    if (maxKeys <= 0) return ranged
     val eligible = pairs.zipWithIndex.find { case ((_, _, nullSafe), i) =>
       val nonNull = row.getAs[Long](s"__cnt$i")
       (!nullSafe || nonNull == total) && row.getAs[Long](s"__ndv$i") <= maxKeys
@@ -656,30 +566,6 @@ object MergeInto {
           ranged.filter(probed.contains)
         }
     }
-  }
-
-  /** Top-level target columns the merge condition references through the
-   *  `t` alias — the projection the split rewrite's anti-join leg scans
-   *  instead of full rows. None when any reference is not a plain
-   *  `t.<col>` / `s.<col>` two-or-more-part attribute (unqualified or
-   *  computed references cannot be attributed to a side) — the caller
-   *  then falls back to the full-width projection, which is always
-   *  sufficient. */
-  private[ops] def conditionTargetCols(condition: Column): Option[Seq[String]] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    val out = scala.collection.mutable.LinkedHashSet[String]()
-    var ok = true
-    org.apache.spark.sql.graftshim.SparkInternals.expr(condition).foreach {
-      case u: UnresolvedAttribute if u.nameParts.length >= 2 =>
-        u.nameParts.head.toLowerCase match {
-          case "t" => out += u.nameParts(1)
-          case "s" => ()
-          case _ => ok = false
-        }
-      case _: UnresolvedAttribute => ok = false
-      case _ => ()
-    }
-    if (ok) Some(out.toSeq) else None
   }
 
   /** (targetCol, sourceCol, isNullSafe) equi pairs under the `t`/`s`

@@ -2698,7 +2698,7 @@ class ExtSpec extends SparkSpec {
 
   test("indexed serve: over-row-budget fallback equals the hinted serve") {
     // the broadcast hints are gated on a COUNTED batch row budget, not
-    // the distinct-band-key cap: with the budget forced to 0 every join
+    // the distinct-band-key cap: with the budget passed as 0 every join
     // must take the un-hinted (planner/AQE-sized) path and return
     // exactly the same pairs — the 100 TB dup-heavy-batch safety valve
     val corpus = graft.tools.ScaleCorpus.documents(spark, 200)
@@ -2709,14 +2709,14 @@ class ExtSpec extends SparkSpec {
     val batch = corpus.filter(col("id").isin(10L, 110L))
       .select((col("id") + 1000L).as("id"), col("text"))
       .unionByName(Seq((2001L, "zqa1 zqb1 zqc1 zqd1 zqe1")).toDF("id", "text"))
-    def serve() = Dedup.minhashPairsIncrementalIndexed(
-        bandT, sigT, batch, "id", "text")
+    def serve(broadcastMaxRows: Long) = Dedup.indexedPairs(
+        bandT, sigT, batch, "id", "text", shingleSize = 3, numHashes = 64,
+        bands = 16, minEst = 0.5, seed = TextHash.DefaultSeed,
+        maxProbeKeys = 1 << 20, broadcastMaxRows = broadcastMaxRows)
       .select("id_a", "id_b", "est_jaccard", "in_corpus")
       .as[(Long, Long, Double, Boolean)].collect().toSet
-    val hinted = serve()
-    spark.conf.set("spark.graft.dedup.broadcastMaxRows", "0")
-    val unhinted = try serve()
-      finally spark.conf.unset("spark.graft.dedup.broadcastMaxRows")
+    val hinted = serve(Dedup.BroadcastMaxRows)
+    val unhinted = serve(0L)
     assert(hinted.nonEmpty && unhinted === hinted,
       "over-budget un-hinted serve diverged from the hinted serve")
   }
@@ -2796,5 +2796,49 @@ class ExtSpec extends SparkSpec {
       .as[String].collect().toSet
     assert(fast === Set(lo) && distD === fast,
       s"dedup keeper diverged: fast=$fast distributed=$distD")
+  }
+
+  test("driver and distributed paths agree on double (-0.0/0.0) and binary ids") {
+    // the driver union-finds only take id types DriverOrdering can order
+    // like Spark: doubles (Spark equates -0.0 and 0.0 in keys, driver
+    // equality does not) and binaries (no JVM ordering or value equality)
+    // take the distributed path at any driverMaxEdges, so both dispatch
+    // settings return identical labels and survivors
+    import java.lang.Double.doubleToRawLongBits
+    val dPairs = Seq((-0.0, 1.0), (0.0, 2.0)).toDF("id_a", "id_b").localCheckpoint()
+    def dLabels(maxEdges: Long) = Dedup.connectedComponents(dPairs, driverMaxEdges = maxEdges)
+      .as[(Double, Double)].collect()
+      .map { case (i, c) => (doubleToRawLongBits(i), doubleToRawLongBits(c)) }.toSet
+    val dDriver = dLabels(1L << 20)
+    assert(dDriver === dLabels(0L), "double CC labels diverged between dispatch paths")
+    assert(dDriver.map(_._2).size === 1, s"-0.0 and 0.0 must join one component: $dDriver")
+    val dBatch = Seq(-0.0, 0.0, 1.0, 2.0, 3.0).toDF("id")
+    val dIn = Seq((-0.0, 1.0, false), (0.0, 2.0, false), (3.0, 100.0, true))
+      .toDF("id_a", "id_b", "in_corpus").localCheckpoint()
+    def dSurvivors(maxEdges: Long) =
+      Dedup.dedupIncrementalFromPairs(dIn, dBatch, "id", driverMaxEdges = maxEdges)
+        .as[Double].collect().map(doubleToRawLongBits).toSet
+    val dKept = dSurvivors(1L << 20)
+    assert(dKept === dSurvivors(0L), "double survivors diverged between dispatch paths")
+    assert(dKept === Set(doubleToRawLongBits(-0.0), doubleToRawLongBits(0.0)),
+      s"only the zero-keyed component minimum rows survive, got $dKept")
+
+    def b(x: Int): Array[Byte] = Array(x.toByte)
+    val bPairs = Seq((b(1), b(2)), (b(2), b(3))).toDF("id_a", "id_b").localCheckpoint()
+    def bLabels(maxEdges: Long) = Dedup.connectedComponents(bPairs, driverMaxEdges = maxEdges)
+      .as[(Array[Byte], Array[Byte])].collect()
+      .map { case (i, c) => (i.toSeq, c.toSeq) }.toSet
+    val bDriver = bLabels(1L << 20)
+    assert(bDriver === bLabels(0L), "binary CC labels diverged between dispatch paths")
+    assert(bDriver === Set(1, 2, 3).map(i => (b(i).toSeq, b(1).toSeq)))
+    val bBatch = Seq(b(1), b(2), b(3), b(9)).toDF("id")
+    val bIn = Seq((b(1), b(2), false), (b(2), b(3), false), (b(9), b(100), true))
+      .toDF("id_a", "id_b", "in_corpus").localCheckpoint()
+    def bSurvivors(maxEdges: Long) =
+      Dedup.dedupIncrementalFromPairs(bIn, bBatch, "id", driverMaxEdges = maxEdges)
+        .as[Array[Byte]].collect().map(_.toSeq).toSet
+    val bKept = bSurvivors(1L << 20)
+    assert(bKept === bSurvivors(0L), "binary survivors diverged between dispatch paths")
+    assert(bKept === Set(b(1).toSeq), s"only the component minimum survives, got $bKept")
   }
 }

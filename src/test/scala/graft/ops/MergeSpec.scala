@@ -402,15 +402,13 @@ class MergeSpec extends SparkSpec {
       .toDF("id", "s", "v")
     val cond = col("t.id") === col("s.id") && col("t.s") === col("s.s")
     val all = t.manifest()
-    // fast path (source under the cap) vs agg path (cap forced under the
-    // row count, key probe still allowed at its own default)
+    // fast path (source under the key budget) vs agg path (budget forced
+    // under the row count, which also caps the key probe)
     val ((cFast, bFast), smallF) = MergeInto.discoveryCandidatesSized(t, src, cond, all)
     assert(smallF === Some(4L), "4-row source must take the driver fast path")
-    spark.conf.set("spark.graft.merge.probeMaxKeys", "3")
     val ((cAgg3, bAgg), smallA) =
-      try MergeInto.discoveryCandidatesSized(t, src, cond, all)
-      finally spark.conf.unset("spark.graft.merge.probeMaxKeys")
-    assert(smallA.isEmpty, "over-cap source must take the agg path")
+      MergeInto.discoveryCandidatesSized(t, src, cond, all, maxKeys = 3)
+    assert(smallA.isEmpty, "over-budget source must take the agg path")
     // candidate sets agree up to the key-probe refinement the tiny cap
     // disabled: fast-path candidates are a subset of the agg path's
     // range-pruned set and still cover every real match
@@ -441,64 +439,47 @@ class MergeSpec extends SparkSpec {
     assert(got === Set((1, "newer", 300L), (2, "keep", 100L), (3, "insert", 300L)))
   }
 
-  test("split rewrite == full-outer rewrite, clause family by clause family") {
-    // the split (broadcast left-join leg + anti-join insert leg) must
-    // land byte-identical table content to the full-outer path for every
-    // routing class: matched update, matched conditional delete,
-    // unmatched-target keep, bySource update/delete with dup-key
-    // sources, inserts (incl. NULL-key), and non-equi extra conjuncts
+  test("rewrite routes every clause family to the expected rows") {
+    // one rewrite plan (full outer join of the touched files against the
+    // source) for every routing class: matched conditional delete,
+    // matched update under a non-equi conjunct, unmatched-target keep,
+    // conditional insert, and bySource update/delete with a dup-key
+    // source (matched target rows kept exactly once)
     def build(dir: String) = SnapshotTable.create(spark, tmpDir(dir),
       Seq((1, "a", 10), (2, "b", 20), (3, "c", 30), (4, "d", 40), (5, "e", 50))
         .toDF("id", "name", "qty"))
-    val srcRows = Seq(
-      (2, "B", 200), (3, "C", 5), (7, "g", 70), (8, "h", 80),
-      (2, "B2", 201)) // dup key for the bySource variant
-    def runMerges(t: SnapshotTable, dupKeys: Boolean): Unit = {
-      val src = (if (dupKeys) srcRows else srcRows.dropRight(1))
-        .toDF("id", "name", "qty")
-      if (!dupKeys) {
-        t.merge(src, col("t.id") === col("s.id") && col("t.qty") < 35)
-          .whenMatched(col("s.qty") < 10).delete()
-          .whenMatched().updateAll()
-          .whenNotMatched(col("s.qty") > 75).insertAll()
-          .execute()
-      } else {
-        t.merge(src, col("t.id") === col("s.id"))
-          .whenNotMatchedBySource(col("t.qty") > 45).delete()
-          .whenNotMatchedBySource().update(Map("name" -> upper(col("t.name"))))
-          .whenNotMatched().insertAll()
-          .execute()
-      }
-    }
-    for (dupKeys <- Seq(false, true)) {
-      val tSplit = build("msplit")
-      // force the split below its touched-bytes scale gate
-      spark.conf.set("spark.graft.merge.splitMinTargetBytes", "0")
-      try runMerges(tSplit, dupKeys)
-      finally spark.conf.unset("spark.graft.merge.splitMinTargetBytes")
-      val tFull = build("mfull")
-      spark.conf.set("spark.graft.merge.splitRewrite", "false")
-      try runMerges(tFull, dupKeys)
-      finally spark.conf.unset("spark.graft.merge.splitRewrite")
-      val got = tSplit.read().as[(Int, String, Int)].collect().toSeq
-        .sortBy(r => (r._1, r._2))
-      val want = tFull.read().as[(Int, String, Int)].collect().toSeq
-        .sortBy(r => (r._1, r._2))
-      assert(got === want, s"split vs full-outer diverged (dupKeys=$dupKeys)")
-    }
+    def rows(t: SnapshotTable) =
+      t.read().as[(Int, String, Int)].collect().toSeq.sortBy(r => (r._1, r._2))
+    val src = Seq((2, "B", 200), (3, "C", 5), (7, "g", 70), (8, "h", 80))
+      .toDF("id", "name", "qty")
+    val t1 = build("mclauses")
+    t1.merge(src, col("t.id") === col("s.id") && col("t.qty") < 35)
+      .whenMatched(col("s.qty") < 10).delete()
+      .whenMatched().updateAll()
+      .whenNotMatched(col("s.qty") > 75).insertAll()
+      .execute()
+    assert(rows(t1) === Seq((1, "a", 10), (2, "B", 200), (4, "d", 40),
+      (5, "e", 50), (8, "h", 80)))
+    val dupSrc = src.unionByName(Seq((2, "B2", 201)).toDF("id", "name", "qty"))
+    val t2 = build("mbysource")
+    t2.merge(dupSrc, col("t.id") === col("s.id"))
+      .whenNotMatchedBySource(col("t.qty") > 45).delete()
+      .whenNotMatchedBySource().update(Map("name" -> upper(col("t.name"))))
+      .whenNotMatched().insertAll()
+      .execute()
+    assert(rows(t2) === Seq((1, "A", 10), (2, "b", 20), (3, "c", 30),
+      (4, "D", 40), (7, "g", 70), (8, "h", 80)))
   }
 
-  test("split rewrite: NULL merge key inserts exactly once (anti-join leg)") {
+  test("NULL merge key inserts exactly once") {
     val t = SnapshotTable.create(spark, tmpDir("mnull"),
       Seq((Some(1), "a"), (Some(2), "b")).toDF("id", "v"))
     val src = Seq((Option.empty[Int], "n"), (Some(2), "B"), (Some(9), "i"))
       .toDF("id", "v")
-    spark.conf.set("spark.graft.merge.splitMinTargetBytes", "0")
-    try t.merge(src, col("t.id") === col("s.id"))
+    t.merge(src, col("t.id") === col("s.id"))
       .whenMatched().updateAll()
       .whenNotMatched().insertAll()
       .execute()
-    finally spark.conf.unset("spark.graft.merge.splitMinTargetBytes")
     val got = t.read().as[(Option[Int], String)].collect().toSet
     assert(got === Set((Some(1), "a"), (Some(2), "B"), (Some(9), "i"), (None, "n")))
   }
