@@ -753,7 +753,7 @@ object Bench {
     // disjoint keyed upserts commute, so any interleaving converges.
     // Per-commit phase attribution (r14 verdict #2): commits/s swung
     // 2.9× across rounds with nothing in the artifact to adjudicate it.
-    // `SnapshotTable.commitPhases` records wall nanos per phase
+    // `PhaseLog.capture` records wall time per phase
     // (source_stage / discovery / index / write_job / harvest / cas)
     // across all writer threads
     // during the concurrent window; `busy` sums each thread's own
@@ -802,7 +802,6 @@ object Bench {
           }).toMap
         val t = mkTable()
         SnapshotTable.occStats.reset()
-        SnapshotTable.commitPhases.reset()
         val conflicts = new java.util.concurrent.atomic.AtomicLong
         val busyNanos = new java.util.concurrent.atomic.AtomicLong
         val recomputeNanos = new java.util.concurrent.atomic.AtomicLong
@@ -840,10 +839,11 @@ object Bench {
             smallFileBytes = 1L << 30,
             scope = Some(col("id") >= writers * span)); () }
         })
-        threads.foreach(_.start()); threads.foreach(_.join())
+        val (_, timed) = ext.PhaseLog.capture {
+          threads.foreach(_.start()); threads.foreach(_.join())
+        }
         val sec = (System.nanoTime() - t0) / 1e9
-        val phases = SnapshotTable.commitPhases.secondsByPhase
-        SnapshotTable.commitPhases.disable() // exclude the serial replay
+        val phases = timed.groupMapReduce(_._1)(_._2)(_ + _).toSeq.sortBy(_._1)
         val mwCalib1 = lightCalib() // closes the WINDOW, before the replay
         val commits = t.currentVersion() - v0
         val rebases = SnapshotTable.occStats.rebases.get()
@@ -863,10 +863,6 @@ object Bench {
           (mwCalib0, mwCalib1)))
       } catch { case e: Throwable =>
         System.err.println(s"[bench][multi_writer]: ${e.getMessage}"); None
-      } finally {
-        // a throw mid-block must not leave process-wide phase timing
-        // enabled for every subsequent commit measurement
-        graft.tables.SnapshotTable.commitPhases.disable()
       }
     // -------- reference-scale anchor (r14 verdict #7): the reference's
     // own 999+1,100-row contact CSVs (`data/*.csv`) through the same

@@ -532,26 +532,34 @@ object Dedup {
       bands, numHashes / bands)
   }
 
-  /** Signature-level geometry a persisted signature table pins (the
-   *  band count is banding-side and pinned separately by
-   *  [[buildMinhashIndexTables]]). */
+  /** The `graft.minhash.*` geometry a persisted index table pins. A
+   *  build/serve parameter mismatch computes bandhashes over DIFFERENT
+   *  signature slices, the band equi-join finds nothing, and every
+   *  corpus duplicate silently "survives" — serves validate the pin
+   *  ([[checkSignatureGeometry]]) before probing. `bands` is pinned only
+   *  by tables that band ([[buildMinhashIndexTables]]). */
   private[graft] def signatureGeometryProps(
       shingleSize: Int = 3, numHashes: Int = 64,
-      seed: Long = TextHash.DefaultSeed): Map[String, String] =
-    Map("graft.minhash.shingleSize" -> shingleSize.toString,
-      "graft.minhash.numHashes" -> numHashes.toString,
-      "graft.minhash.seed" -> seed.toString)
+      seed: Long = TextHash.DefaultSeed,
+      bands: Option[Int] = None): Map[String, String] =
+    scala.collection.immutable.ListMap(
+      "graft.minhash.shingleSize" -> shingleSize.toString,
+      "graft.minhash.numHashes" -> numHashes.toString) ++
+      bands.map(b => "graft.minhash.bands" -> b.toString) +
+      ("graft.minhash.seed" -> seed.toString)
 
-  /** Refuse serving a signature table with geometry it was not built
-   *  with; unpinned tables (predating the pin, or foreign) pass. */
+  /** Refuse serving `what` (an index table) with geometry it was not
+   *  built with; unpinned tables (predating the pin, or foreign) pass. */
   private[graft] def checkSignatureGeometry(
       t: graft.tables.SnapshotTable,
       shingleSize: Int = 3, numHashes: Int = 64,
-      seed: Long = TextHash.DefaultSeed): Unit = {
+      seed: Long = TextHash.DefaultSeed,
+      bands: Option[Int] = None,
+      what: String = "signature table"): Unit = {
     val props = t.properties()
-    signatureGeometryProps(shingleSize, numHashes, seed).foreach {
+    signatureGeometryProps(shingleSize, numHashes, seed, bands).foreach {
       case (k, v) => props.get(k).foreach(p => require(p == v,
-        s"signature table ${t.root} was built with ${k.stripPrefix("graft.minhash.")}=$p, " +
+        s"$what ${t.root} was built with ${k.stripPrefix("graft.minhash.")}=$p, " +
           s"serve called with $v"))
     }
   }
@@ -597,15 +605,8 @@ object Dedup {
       val t = graft.tables.SnapshotTable.create(spark, root, df.limit(1))
         .setProperties(Map( // seed commit carries the bloom config
           "graft.bloom.columns" -> keyCol,
-          "graft.bloom.manifest" -> "true",
-          // pin the signature geometry: a build/serve parameter mismatch
-          // computes bandhashes over DIFFERENT signature slices, the band
-          // equi-join finds nothing, and every corpus duplicate silently
-          // "survives" — the serve validates these before probing
-          "graft.minhash.shingleSize" -> shingleSize.toString,
-          "graft.minhash.numHashes" -> numHashes.toString,
-          "graft.minhash.bands" -> bands.toString,
-          "graft.minhash.seed" -> seed.toString))
+          "graft.bloom.manifest" -> "true") ++
+          signatureGeometryProps(shingleSize, numHashes, seed, Some(bands)))
       t.overwrite(df.repartitionByRange(fileCount(keyCol), col(keyCol)))
       t
     }
@@ -665,14 +666,8 @@ object Dedup {
     // bands=8 against a bands=16 index passes every divisibility check
     // but band-hashes different signature slices, so the equi-join finds
     // zero collisions and corpus duplicates silently survive
-    for (t <- Seq(bandTable, sigTable)) {
-      val props = t.properties()
-      Seq("shingleSize" -> shingleSize, "numHashes" -> numHashes,
-        "bands" -> bands, "seed" -> seed).foreach { case (k, v) =>
-        props.get(s"graft.minhash.$k").foreach(p => require(p == v.toString,
-          s"index table ${t.root} was built with $k=$p, serve called with $v"))
-      }
-    }
+    for (t <- Seq(bandTable, sigTable))
+      checkSignatureGeometry(t, shingleSize, numHashes, seed, Some(bands), "index table")
     val r = numHashes / bands
     // keyProbedRead refuses DV/delta/column-mapping overlays loudly —
     // the raw pruned-file read would silently miss them otherwise

@@ -1,8 +1,10 @@
 package graft.ext
 
-/** Opt-in wall-clock phase log for lifecycle operators (index build /
- *  append / compact / serve). Inert unless a capture is active — the
- *  library never pays for it in production paths. The bench wraps each
+/** Opt-in wall-clock phase log: lifecycle operators (index build /
+ *  append / compact / serve) and the commit path — `source_stage`,
+ *  `discovery` and `index` in MERGE, `write_job`, `harvest` and `cas`
+ *  in every commit. Inert unless a capture is active — the library
+ *  never pays for it in production paths. The bench wraps each
  *  LIFECYCLE declared query (q115/q117/q124/q126/q128) in [[capture]]
  *  so BENCH_DETAIL can attribute a query's wall to its phases: the
  *  session-cached fixture builds land in the warm rep, the steady reps
@@ -11,7 +13,9 @@ package graft.ext
  *  with no way to see WHICH phase moved).
  *
  *  Single active capture at a time (the bench is single-threaded across
- *  queries); phases timed on any thread land in the active capture. */
+ *  queries); phases timed on any thread land in the active capture. A
+ *  phase that throws still records its time, so a retried attempt's
+ *  work stays in the sums. */
 object PhaseLog {
   @volatile private var sink:
     Option[java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]] = None
@@ -31,8 +35,6 @@ object PhaseLog {
     case None => body
     case Some(buf) =>
       val t0 = System.nanoTime()
-      val r = body
-      buf.add(phase -> (System.nanoTime() - t0) / 1e9)
-      r
+      try body finally buf.add(phase -> (System.nanoTime() - t0) / 1e9)
   }
 }

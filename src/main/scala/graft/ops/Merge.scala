@@ -3,7 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ext.PhaseLog
 import graft.tables.SnapshotTable
+import graft.tables.SnapshotTable.Snapshot
 
 /**
  * MERGE INTO for native snapshot tables — the one genuine capability hole
@@ -93,8 +95,7 @@ final class MergeInto(
     // consumer triples that cost, and a non-deterministic source could
     // even change between discovery and rewrite. Blocks are released
     // before returning.
-    val srcMat = SnapshotTable.commitPhases.timed("source_stage")(
-      source.localCheckpoint())
+    val srcMat = PhaseLog.timed("source_stage")(source.localCheckpoint())
     try executeWith(srcMat)
     finally srcMat.queryExecution.analyzed.collectLeaves().foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
@@ -104,11 +105,13 @@ final class MergeInto(
 
   private def executeWith(source: DataFrame): SnapshotTable = {
     val spark = table.spark
-    // pinned for the read-compute-commit OCC guard: a commit landing
-    // between this snapshot read and the replaceFiles below fails the
-    // merge loudly (ConcurrentCommitException) instead of being discarded
-    val snapshotVersion = table.currentVersion()
-    val committedSchema = table.schema
+    // ONE snapshot serves the whole merge: schema, file list, target
+    // read, discovery pruning and the touched-file reads all come from
+    // it, and its version is the read-compute-commit OCC guard — a
+    // commit landing before the replaceFiles below fails the merge
+    // loudly (ConcurrentCommitException) instead of being discarded
+    val snap = table.head()
+    val committedSchema = snap.schema
     // WITH SCHEMA EVOLUTION: the output schema is the committed schema plus
     // any NEW source columns (case-insensitive match, forced nullable —
     // untouched files must read them as NULL). Touched files are read with
@@ -122,7 +125,7 @@ final class MergeInto(
           .filterNot(f => committedSchema.fieldNames.exists(_.equalsIgnoreCase(f.name)))
         // untouched files carried forward may still physically hold a
         // DROP COLUMNS-tombstoned name — re-widening would resurrect it
-        table.assertResurrectionSafe(added.map(_.name),
+        table.assertResurrectionSafe(snap, added.map(_.name),
           "MERGE WITH SCHEMA EVOLUTION")
         // existing columns: a strictly wider lossless source type widens
         // the target column; an up-castable narrower source needs no
@@ -149,8 +152,8 @@ final class MergeInto(
           widened ++ added.map(_.copy(nullable = true)))
       }
     val targetCols = targetSchema.fields.map(_.name).toSeq
-    val allFiles = table.manifest()
-    val targetAll = table.read()
+    val allFiles = snap.files.map(_.path)
+    val targetAll = table.view(snap)
     val srcExists = source.withColumn(S_EXISTS, lit(true)).alias("s")
 
     // Route each joined row to the index of the first applicable clause;
@@ -193,13 +196,13 @@ final class MergeInto(
             when(col(ACTION) === idx, v).otherwise(acc)
           }.as(name)
       val inserts = lockSchema(withAction.select(targetCols.map(insCol): _*))
-      // allFiles=Nil skips the candidate pruning/probing (unused here)
-      // while still computing the key-bounds rebase guard: an interleaved
-      // commit whose files provably hold none of our keys cannot change
-      // which source rows are "not matched", so the insert commit rebases
-      val (_, insBounds) = discoveryCandidates(table, source, condition, Nil)
+      // only the key-bounds rebase guard is needed here (no candidate
+      // files): an interleaved commit whose files provably hold none of
+      // our keys cannot change which source rows are "not matched", so
+      // the insert commit rebases
+      val (_, insBounds) = discoveryCandidates(snap, source, condition, pruneFiles = false)
       return table.replaceFiles(allFiles, inserts, actionTag,
-        expectVersion = Some(snapshotVersion), rebasePredicate = insBounds)
+        expectVersion = Some(snap.version), rebasePredicate = insBounds)
     }
 
     // ---- job 1: touched-file discovery, fused with the cardinality
@@ -242,7 +245,7 @@ final class MergeInto(
         // keys and candidate files all derive from ONE bounded driver
         // collect; bigger sources pay one tiny agg job).
         val ((candidateFiles, bounds), smallTotal) =
-          discoveryCandidatesSized(table, source, condition, allFiles)
+          discoveryCandidatesSized(snap, source, condition)
         // set when discovery proved the source fits the driver key budget
         // AND its estimated bytes fit BroadcastMaxBytes. The row bound
         // alone is not enough: ProbeMaxKeys rows of a WIDE source (blob
@@ -257,7 +260,7 @@ final class MergeInto(
         // lineage captured inside the table read: on a DV-bearing table
         // the scan carries an anti-join, under which input_file_name()
         // would come back empty and discovery would touch nothing
-        val tFiles = table.readFilesWithLineage(candidateFiles, targetSchema, T_FILE)
+        val tFiles = table.readFilesWithLineage(snap, candidateFiles, targetSchema, T_FILE)
           .withColumn(T_UID, monotonically_increasing_id())
           .alias("t")
         // a proven-small source broadcasts: the touched-file discovery
@@ -273,7 +276,7 @@ final class MergeInto(
               .groupBy(col(T_FILE)).agg(max(col("__c")).as("__maxc"))
           else joined.select(col(T_FILE)).distinct()
             .withColumn("__maxc", lit(1L))
-        val rows = SnapshotTable.commitPhases.timed("index")(perFile.collect())
+        val rows = PhaseLog.timed("index")(perFile.collect())
         if (needsCardinality && rows.exists(_.getAs[Long]("__maxc") > 1))
           throw new MergeCardinalityException(
             "MERGE: a target row matched multiple source rows under a clause that is not a single unconditional DELETE")
@@ -287,7 +290,7 @@ final class MergeInto(
       if (touched.isEmpty) {
         // No matched targets: still need the insert path over an empty target.
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], targetSchema)
-      } else table.readFilesAs(touched, targetSchema)
+      } else table.readFilesAs(snap, touched, targetSchema)
 
     // With NO matched clause (bySource-only merges), matched target rows
     // default to KEEP — but the outer join emits one copy per matching
@@ -364,7 +367,7 @@ final class MergeInto(
     val result = lockSchema(routeTarget(t.join(srcExists, condition, "full_outer"))
       .select(targetCols.map(outCol): _*))
     table.replaceFiles(untouched, result, actionTag,
-      expectVersion = Some(snapshotVersion), rebasePredicate = rebaseBounds)
+      expectVersion = Some(snap.version), rebasePredicate = rebaseBounds)
   }
 }
 
@@ -388,12 +391,13 @@ object MergeInto {
   private[ops] val BroadcastMaxBytes = 256L * 1024 * 1024
 
   /**
-   * Target files that can possibly contain a source match, per the
+   * Files of `snap` that can possibly contain a source match, per the
    * condition's `t.<col> = s.<col>` / `<=>` equi pairs and the source's
    * key bounds (min/max per key, one agg job). Null-safe pairs only
    * qualify when the source has no null keys (a null source key matches
    * null target keys, which min/max pruning cannot see). Falls back to
-   * all files when no usable pair exists.
+   * all files when no usable pair exists; `pruneFiles = false` skips the
+   * candidates (returned empty) for callers that need only the bounds.
    *
    * Also returns the key-bounds predicate itself (None when no usable
    * pair exists or the source is empty): the conjunction under which a
@@ -403,11 +407,11 @@ object MergeInto {
    * op's own pruning share one definition of "file this merge read".
    */
   private[ops] def discoveryCandidates(
-      table: SnapshotTable,
+      snap: Snapshot,
       source: DataFrame,
       condition: Column,
-      allFiles: Seq[String]): (Seq[String], Option[Column]) =
-    discoveryCandidatesSized(table, source, condition, allFiles)._1
+      pruneFiles: Boolean = true): (Seq[String], Option[Column]) =
+    discoveryCandidatesSized(snap, source, condition, pruneFiles = pruneFiles)._1
 
   /** [[discoveryCandidates]] plus `Some(rowCount)` when the source proved
    *  SMALL (≤ `maxKeys` rows) — the caller's cue that broadcasting the
@@ -415,14 +419,15 @@ object MergeInto {
    *  on the driver). `maxKeys` is [[ProbeMaxKeys]] except in tests that
    *  force the agg path. */
   private[ops] def discoveryCandidatesSized(
-      table: SnapshotTable,
+      snap: Snapshot,
       source: DataFrame,
       condition: Column,
-      allFiles: Seq[String],
-      maxKeys: Int = ProbeMaxKeys): ((Seq[String], Option[Column]), Option[Long])
-    = SnapshotTable.commitPhases.timed("discovery") {
+      maxKeys: Int = ProbeMaxKeys,
+      pruneFiles: Boolean = true): ((Seq[String], Option[Column]), Option[Long])
+    = PhaseLog.timed("discovery") {
     val pairs = equiPairs(org.apache.spark.sql.graftshim.SparkInternals.expr(condition))
-    if (pairs.isEmpty) return ((allFiles, None), None)
+    def everyFile = if (pruneFiles) snap.files.map(_.path) else Nil
+    if (pairs.isEmpty) return ((everyFile, None), None)
     // ---- small-source fast path: ONE bounded collect of the key columns
     // replaces the min/max/ndv agg job AND the key-probe distinct-collect
     // job (the reference's steady state is a ~10³-row staged batch merged
@@ -433,30 +438,14 @@ object MergeInto {
     // agg path unchanged.
     smallSourceStats(source, pairs, maxKeys) match {
       case Some((total, stats)) =>
-        if (total == 0) return ((allFiles, None), Some(0L))
-        val preds = pairs.zipWithIndex.flatMap { case ((t, _, nullSafe), i) =>
-          val st = stats(i)
-          if (st.mn == null || st.mx == null || (nullSafe && st.nonNull < total)) None
-          else Some(col(t) >= lit(st.mn) && col(t) <= lit(st.mx))
+        if (total == 0) return ((everyFile, None), Some(0L))
+        val bounds = boundsOf(pairs, total, i => (stats(i).mn, stats(i).mx, stats(i).nonNull))
+        val probe = pairs.zipWithIndex.collectFirst {
+          case ((t, _, nullSafe), i)
+              if (!nullSafe || stats(i).nonNull == total) && stats(i).keys.nonEmpty =>
+            (t, stats(i).keys)
         }
-        val bounds = preds.reduceOption(_ && _)
-        val ranged = bounds match {
-          case None => allFiles
-          case Some(b) =>
-            val pruned = table.prunedManifest(b).toSet
-            allFiles.filter(pruned.contains)
-        }
-        val probed =
-          if (ranged.isEmpty) ranged
-          else pairs.zipWithIndex.find { case ((_, _, nullSafe), i) =>
-            (!nullSafe || stats(i).nonNull == total) && stats(i).keys.nonEmpty
-          } match {
-            case None => ranged
-            case Some(((t, _, _), i)) =>
-              val hit = table.keyProbedManifest(t, stats(i).keys).toSet
-              ranged.filter(hit.contains)
-          }
-        return ((probed, bounds), Some(total))
+        return ((candidates(snap, bounds, probe, pruneFiles), bounds), Some(total))
       case None => () // over the cap or non-orderable key type: agg path
     }
     val aggs = pairs.zipWithIndex.flatMap { case ((_, s, _), i) =>
@@ -465,22 +454,37 @@ object MergeInto {
     } :+ count(lit(1)).as("__total")
     val row = source.agg(aggs.head, aggs.tail: _*).head()
     val total = row.getAs[Long]("__total")
-    if (total == 0) return ((allFiles, None), None) // empty source: nothing to prune against
-    val preds = pairs.zipWithIndex.flatMap { case ((t, _, nullSafe), i) =>
-      val mn = row.get(row.fieldIndex(s"__mn$i"))
-      val mx = row.get(row.fieldIndex(s"__mx$i"))
-      val nonNull = row.getAs[Long](s"__cnt$i")
+    if (total == 0) return ((everyFile, None), None) // empty source: nothing to prune against
+    val bounds = boundsOf(pairs, total, i => (row.get(row.fieldIndex(s"__mn$i")),
+      row.get(row.fieldIndex(s"__mx$i")), row.getAs[Long](s"__cnt$i")))
+    ((candidates(snap, bounds, keyProbe(source, row, total, pairs, maxKeys), pruneFiles),
+      bounds), None)
+  }
+
+  /** The source-key bounds predicate over the target columns: per equi
+   *  pair (`i` → min, max, non-null count), `t.col` within [min, max] —
+   *  skipped for an all-null key or a null-safe pair with null keys. */
+  private def boundsOf(pairs: Seq[(String, String, Boolean)], total: Long,
+      stat: Int => (Any, Any, Long)): Option[Column] =
+    pairs.zipWithIndex.flatMap { case ((t, _, nullSafe), i) =>
+      val (mn, mx, nonNull) = stat(i)
       if (mn == null || mx == null || (nullSafe && nonNull < total)) None
       else Some(col(t) >= lit(mn) && col(t) <= lit(mx))
+    }.reduceOption(_ && _)
+
+  /** Bounds → stats-pruned → key-probed candidates over the pinned
+   *  snapshot's files: the files whose stats may hold a row within
+   *  `bounds`, refined by `probe` (a target column and the distinct
+   *  source keys to probe it with) when one is usable. `probe` is only
+   *  evaluated when some file survives the bounds. */
+  private def candidates(snap: Snapshot, bounds: Option[Column],
+      probe: => Option[(String, Seq[Any])], pruneFiles: Boolean): Seq[String] = {
+    val ranged = if (pruneFiles) snap.prunedFiles(bounds) else Nil
+    if (ranged.isEmpty) Nil
+    else probe match {
+      case Some((t, keys)) => snap.keyProbedPaths(t, keys, among = ranged)
+      case None => ranged.map(_.path)
     }
-    val bounds = preds.reduceOption(_ && _)
-    val ranged = bounds match {
-      case None => allFiles
-      case Some(b) =>
-        val pruned = table.prunedManifest(b).toSet
-        allFiles.filter(pruned.contains)
-    }
-    ((keyProbedCandidates(table, source, row, total, pairs, ranged, maxKeys), bounds), None)
   }
 
   /** Per-pair driver-side source-key stats: non-null count, exact
@@ -527,46 +531,34 @@ object MergeInto {
     Some((rows.length.toLong, stats))
   }
 
-  /** Per-KEY refinement of the range-pruned candidate set — the Hudi
-   *  bloom-index tagging role (`hoodie.index.type=BLOOM`). The global
-   *  [min(source), max(source)] envelope degrades to no pruning the
-   *  moment a source batch holds one low and one high key; probing each
-   *  file with the source's DISTINCT keys prunes the gap files by
-   *  stats range and, where the table carries manifest blooms
-   *  ([[graft.tables.FileBloom]]), files whose key range fully overlaps
-   *  (interleaved clustering). Only runs when the source's approximate
-   *  key cardinality fits `maxKeys` ([[ProbeMaxKeys]] — a bounded driver
-   *  collect; keys are scalar, so ≲ a few MB), which is also when
-   *  pruning pays: a source touching millions of distinct keys touches
-   *  most files anyway. Skipped for
-   *  null-safe pairs with null keys (`<=>` can match NULL, which no
-   *  key probe represents); conservative on any miss. */
-  private def keyProbedCandidates(
-      table: SnapshotTable,
+  /** The key probe of the agg path — the Hudi bloom-index tagging role
+   *  (`hoodie.index.type=BLOOM`). The global [min(source), max(source)]
+   *  envelope degrades to no pruning the moment a source batch holds one
+   *  low and one high key; probing each file with the source's DISTINCT
+   *  keys prunes the gap files by stats range and, where the table
+   *  carries manifest blooms ([[graft.tables.FileBloom]]), files whose
+   *  key range fully overlaps (interleaved clustering). Only offered when
+   *  the source's approximate key cardinality fits `maxKeys`
+   *  ([[ProbeMaxKeys]] — a bounded driver collect; keys are scalar, so
+   *  ≲ a few MB), which is also when pruning pays: a source touching
+   *  millions of distinct keys touches most files anyway. Skipped for
+   *  null-safe pairs with null keys (`<=>` can match NULL, which no key
+   *  probe represents); conservative on any miss. */
+  private def keyProbe(
       source: DataFrame,
       row: org.apache.spark.sql.Row,
       total: Long,
       pairs: Seq[(String, String, Boolean)],
-      ranged: Seq[String],
-      maxKeys: Int): Seq[String] = {
-    if (ranged.isEmpty) return ranged
-    val eligible = pairs.zipWithIndex.find { case ((_, _, nullSafe), i) =>
+      maxKeys: Int): Option[(String, Seq[Any])] =
+    pairs.zipWithIndex.find { case ((_, _, nullSafe), i) =>
       val nonNull = row.getAs[Long](s"__cnt$i")
       (!nullSafe || nonNull == total) && row.getAs[Long](s"__ndv$i") <= maxKeys
+    }.flatMap { case ((t, s, _), _) =>
+      // exact key set, re-capped: approx_count_distinct may undercount
+      val keys = source.select(col(s)).na.drop().distinct()
+        .limit(maxKeys + 1).collect().map(_.get(0)).toSeq
+      if (keys.isEmpty || keys.length > maxKeys) None else Some((t, keys))
     }
-    eligible match {
-      case None => ranged
-      case Some(((t, s, _), _)) =>
-        // exact key set, re-capped: approx_count_distinct may undercount
-        val keys = source.select(col(s)).na.drop().distinct()
-          .limit(maxKeys + 1).collect().map(_.get(0)).toSeq
-        if (keys.isEmpty || keys.length > maxKeys) ranged
-        else {
-          val probed = table.keyProbedManifest(t, keys).toSet
-          ranged.filter(probed.contains)
-        }
-    }
-  }
 
   /** (targetCol, sourceCol, isNullSafe) equi pairs under the `t`/`s`
    *  aliases, from the top-level conjuncts of the merge condition. */

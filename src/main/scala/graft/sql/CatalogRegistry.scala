@@ -27,7 +27,7 @@ import graft.tables.{CommitLock, SnapshotTable}
  * commit (not a delta log): a registry holds NAMES, thousands at most,
  * so one head read serves every lookup and there is nothing to replay.
  * A torn newest entry (non-local-FS writer mid-publish) falls back to
- * its predecessor, mirroring `SnapshotTable.currentReadable`.
+ * its predecessor, mirroring `SnapshotTable.readable`.
  *
  * Lookup hot path: table resolution consults the registry, so a lookup
  * must not pay an O(#registrations) directory LIST — committers leave

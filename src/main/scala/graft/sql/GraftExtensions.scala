@@ -132,7 +132,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // pruning OBSERVABILITY (VERDICT r12 #8): EXPLAIN shows
     // `dynamicpruning` and pushed TopN, but not how many manifest files
     // a predicate actually prunes. This TVF replays the scan's own
-    // stats+bloom pruning ([[SnapshotTable.prunedFilesAt]] — the same
+    // stats+bloom pruning ([[SnapshotTable.Snapshot.prunedFiles]] — the same
     // code path `build()` runs) against the current snapshot and
     // reports one summary row: files/rows/bytes total vs kept. A user
     // can paste their WHERE clause (or the IN-list a DPP run would
@@ -154,10 +154,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         val predSql = if (args.size == 2) Some(String.valueOf(arg(1, "predicateSql")))
           else None
         val t = resolveTableRef(root)
-        val v = t.currentVersion()
-        if (v < 0) throw new IllegalArgumentException(
-          s"graft_scan_stats: table $root is empty")
-        val all = t.manifestEntries()
+        val snap = t.readable().getOrElse(throw new IllegalArgumentException(
+          s"graft_scan_stats: table $root is empty"))
+        val all = snap.files
         // Replay the predicate EXACTLY as the executed scan would see
         // it: OPTIMIZE it against the table's frame, so literal casts
         // fold and the injected [[SargableTimePredicates]] rewrite runs
@@ -172,14 +171,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         val pred = predSql.map { sql =>
           val raw = org.apache.spark.sql.functions.expr(sql)
           try {
-            t.read().filter(raw).queryExecution.optimizedPlan match {
+            t.view(snap).filter(raw).queryExecution.optimizedPlan match {
               case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
                 SparkInternals.column(f.condition)
               case _ => raw
             }
           } catch { case scala.util.control.NonFatal(_) => raw }
         }
-        val kept = t.prunedFilesAt(v, pred).map(_.path).toSet
+        val kept = snap.prunedFiles(pred).map(_.path).toSet
         val keptE = all.filter(f => kept.contains(f.path))
         val spark = t.spark
         import spark.implicits._
@@ -187,7 +186,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         // the sentinel would understate totals by 1 per file, so they are
         // excluded from the row sums and surfaced in their own column
         val unknown = all.count(_.rows < 0).toLong
-        val df = Seq((v, all.size.toLong, keptE.size.toLong,
+        val df = Seq((snap.version, all.size.toLong, keptE.size.toLong,
             all.map(_.rows).filter(_ >= 0).sum,
             keptE.map(_.rows).filter(_ >= 0).sum,
             all.map(_.bytes).sum, keptE.map(_.bytes).sum,

@@ -332,10 +332,11 @@ case class GraftDescribeDetailCommand(parts: Seq[String]) extends LeafRunnableCo
     // ONE snapshot read serves every column — per-accessor calls would
     // re-list the log repeatedly and could mix two versions' facts if a
     // commit landed in between
-    t.currentReadable() match {
+    t.readable() match {
       case None => Seq(Row(t.root, -1L, 0, 0L, 0, "", ""))
-      case Some((v, e)) =>
-        Seq(Row(t.root, v, e.files.size,
+      case Some(snap) =>
+        val e = snap.entry
+        Seq(Row(t.root, snap.version, e.files.size,
           e.files.map(f => math.max(0L, f.bytes)).sum,
           e.deltaFiles.map(_.size).getOrElse(0),
           e.clusterBy.getOrElse(Nil).mkString(","),

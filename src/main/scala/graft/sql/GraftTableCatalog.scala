@@ -455,11 +455,12 @@ class GraftTableCatalog extends TableCatalog with FunctionCatalog {
 /** DSv2 face of one [[SnapshotTable]] (optionally pinned to a historic
  *  version — read-only time travel).
  *
- *  The snapshot version is resolved ONCE, here, and drives both the
- *  analysis schema and the scan's file list: a commit landing between
- *  analysis and scan planning cannot pair the new version's files with
- *  the old version's schema (snapshot isolation; reference formats pin
- *  the snapshot at scan creation the same way). */
+ *  The snapshot is resolved ONCE, here, and drives the analysis schema,
+ *  properties, partitioning and the scan's file list: a commit landing
+ *  between analysis and scan planning cannot pair the new version's
+ *  files with the old version's schema (snapshot isolation; reference
+ *  formats pin the snapshot at scan creation the same way). The head is
+ *  resolved torn-tolerant, like every read. */
 class GraftTable(
     val table: SnapshotTable,
     ident: Identifier,
@@ -467,15 +468,15 @@ class GraftTable(
     readOptimized: Boolean = false)
     extends Table with SupportsRead with SupportsWrite with SupportsDelete {
 
-  private val snapshotVersion: Long =
-    pinnedVersion.getOrElse(table.currentReadable().map(_._1).getOrElse(-1L))
-  private val snapshotSchema: StructType =
-    if (snapshotVersion < 0) new StructType() else table.schemaAt(snapshotVersion)
+  /** None: the table has no commit yet. */
+  private val snapshot: Option[SnapshotTable.Snapshot] =
+    pinnedVersion.map(table.snapshotAt).orElse(table.readable())
 
   override def name(): String =
     ident.toString + pinnedVersion.map(v => s"@v$v").getOrElse("")
-  override def schema(): StructType = snapshotSchema
-  override def properties(): util.Map[String, String] = table.properties().asJava
+  override def schema(): StructType = snapshot.fold(new StructType())(_.schema)
+  override def properties(): util.Map[String, String] =
+    snapshot.fold(Map.empty[String, String])(_.properties).asJava
 
   /** The persisted cluster spec reported back as DSv2 partitioning
    *  transforms — the inverse of [[GraftTableCatalog.createTable]]'s
@@ -486,7 +487,7 @@ class GraftTable(
     import org.apache.spark.sql.connector.expressions.Expressions
     val Bucket = """bucket\(\s*(\d+)\s*,\s*([^)]+?)\s*\)""".r
     val Time = """(years|months|days|hours)\(\s*([^)]+?)\s*\)""".r
-    table.clusterSpec().map {
+    snapshot.fold(Seq.empty[String])(_.clusterSpec).map {
       case Bucket(n, cs) =>
         Expressions.bucket(n.toInt,
           cs.split(",").map(_.trim).filter(_.nonEmpty).toSeq: _*)
@@ -511,18 +512,15 @@ class GraftTable(
 
   /** The pinned snapshot's manifest for stats-only answering — None when
    *  MoR deltas are pending (base stats would be stale; the
-   *  [[MetadataOnlyAgg]] rule then leaves the scan in place). Lazy: the
-   *  snapshot is pinned and immutable, so one manifest read serves every
-   *  optimizer iteration that consults it. */
-  private[sql] lazy val statsFiles: Option[Seq[graft.tables.SnapshotTable.FileEntry]] =
-    if (snapshotVersion < 0) Some(Nil)
-    else {
-      val e = table.commitEntry(snapshotVersion)
+   *  [[MetadataOnlyAgg]] rule then leaves the scan in place). */
+  private[sql] def statsFiles: Option[Seq[graft.tables.SnapshotTable.FileEntry]] =
+    snapshot match {
+      case None => Some(Nil)
       // the read-optimized face SERVES the base files, so base stats are
       // exact for it even while deltas are pending
-      if (e.dvFiles.exists(_.nonEmpty) ||
-        (!readOptimized && e.deltaFiles.exists(_.nonEmpty))) None
-      else Some(e.files)
+      case Some(s) =>
+        if (s.dvPaths.nonEmpty || (!readOptimized && s.deltaPaths.nonEmpty)) None
+        else Some(s.files)
     }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
@@ -538,11 +536,12 @@ class GraftTable(
     // reported bucket layout (storage-partitioned joins) while doing so.
     // The _ro face never skips DVs: they are base state, and
     // resurrecting deleted rows is staleness of a different kind.
-    require(readOptimized || table.deltaManifestAt(snapshotVersion).isEmpty,
-      s"${name()} has pending MoR deltas at version $snapshotVersion: query the " +
+    val snap = table.required(snapshot)
+    require(readOptimized || snap.deltaPaths.isEmpty,
+      s"${name()} has pending MoR deltas at version ${snap.version}: query the " +
         "_rt/_ro faces, SnapshotTable.read()/readVersion() (real-time view), " +
         "or applyDeltas() first")
-    new GraftScanBuilder(table, snapshotVersion, snapshotSchema)
+    new GraftScanBuilder(table, snap)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -588,22 +587,19 @@ class GraftRtTable(
     pinnedVersion: Option[Long] = None)
     extends Table with SupportsRead {
 
-  private val snapshotVersion: Long =
-    pinnedVersion.getOrElse(table.currentReadable().map(_._1).getOrElse(-1L))
-  // the committed LOGICAL schema from the entry JSON: the merged view
-  // aligns deltas to it by construction, so building the whole merged
-  // plan here just to read .schema would pay delta/DV resolution on
-  // every catalog lookup of the face
-  private val snapshotSchema: StructType =
-    if (snapshotVersion < 0) new StructType()
-    else org.apache.spark.sql.types.DataType
-      .fromJson(table.commitEntry(snapshotVersion).schemaJson)
-      .asInstanceOf[StructType]
+  private val snapshot: Option[SnapshotTable.Snapshot] =
+    pinnedVersion.map(table.snapshotAt).orElse(table.readable())
+  // the committed LOGICAL schema from the entry: the merged view aligns
+  // deltas to it by construction, so building the whole merged plan
+  // here just to read .schema would pay delta/DV resolution on every
+  // catalog lookup of the face
+  private val snapshotSchema: StructType = snapshot.fold(new StructType())(_.schema)
 
   override def name(): String =
     ident.toString + pinnedVersion.map(v => s"@v$v").getOrElse("")
   override def schema(): StructType = snapshotSchema
-  override def properties(): util.Map[String, String] = table.properties().asJava
+  override def properties(): util.Map[String, String] =
+    snapshot.fold(Map.empty[String, String])(_.properties).asJava
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
 
@@ -636,7 +632,7 @@ class GraftRtTable(
             override def sqlContext: org.apache.spark.sql.SQLContext = context
             override def schema: StructType = readSchema()
             override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-              val base = table.readVersion(snapshotVersion)
+              val base = table.view(table.required(snapshot))
               val filtered = pushed.flatMap(GraftScanBuilder.toColumn)
                 .foldLeft(base)(_ filter _)
               // zero-column projections (count(*)) are legal: select()
@@ -658,14 +654,15 @@ class GraftRtTable(
  *  exactly the surviving files — the scan Spark executes is its native
  *  vectorized parquet `Batch` (columnar read, whole-stage codegen, parquet
  *  row-group pushdown), not a `RDD[Row]` bridge that would pay an
- *  InternalRow→Row→InternalRow tax per row at 100 TB. `version` and
- *  `tableSchema` are resolved together by [[GraftTable]] at load time —
- *  schema and file list always come from the same snapshot. */
-class GraftScanBuilder(table: SnapshotTable, version: Long, tableSchema: StructType)
+ *  InternalRow→Row→InternalRow tax per row at 100 TB. `snap` is the
+ *  snapshot [[GraftTable]] resolved at load time — schema and file list
+ *  always come from it. */
+class GraftScanBuilder private[sql] (table: SnapshotTable, snap: SnapshotTable.Snapshot)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates with SupportsPushDownLimit
     with SupportsPushDownTopN {
 
+  private val tableSchema = snap.schema
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = tableSchema
   private var metaAgg: Option[(StructType, Seq[Array[Any]])] = None
@@ -786,7 +783,7 @@ class GraftScanBuilder(table: SnapshotTable, version: Long, tableSchema: StructT
     // consumed no-op null guards don't change any aggregate's input —
     // only REAL filters make stats unanswerable
     if (pushed.exists(f => !consumedNoops.contains(f))) return false
-    metaAgg = GraftScanBuilder.metadataAggregate(table, version, tableSchema, aggregation)
+    metaAgg = GraftScanBuilder.metadataAggregate(table, snap, aggregation)
     metaAgg.isDefined
   }
 
@@ -796,7 +793,6 @@ class GraftScanBuilder(table: SnapshotTable, version: Long, tableSchema: StructT
    *  only REMOVE rows) and for the read-optimized MoR face (the proof is
    *  over the base files it serves); delta-bearing snapshots never reach
    *  a scan builder. */
-  private lazy val liveFiles = table.prunedFilesAt(version, None)
   private var consumedNoops: Set[Filter] = Set.empty
   private def provablyNoNulls(col: String): Boolean = {
     // resolve per the SESSION's case sensitivity (this proof feeds a
@@ -806,7 +802,7 @@ class GraftScanBuilder(table: SnapshotTable, version: Long, tableSchema: StructT
     val fields = tableSchema.fields.filter(f =>
       if (caseSensitive) f.name == col else f.name.equalsIgnoreCase(col))
     fields.length == 1 && fields.forall { f =>
-      !f.nullable || liveFiles.forall { fe =>
+      !f.nullable || snap.files.forall { fe =>
         fe.stats.get(f.name).orElse {
           val m = fe.stats.keys.filter(_.equalsIgnoreCase(f.name)).toSeq
           if (m.size == 1) fe.stats.get(m.head) else None
@@ -855,14 +851,14 @@ class GraftScanBuilder(table: SnapshotTable, version: Long, tableSchema: StructT
     // manifest stats pruning runs on LOGICAL names (all commit metadata is
     // logically keyed, even after RENAME COLUMN)
     val predicate = realPushed.flatMap(GraftScanBuilder.toColumn).reduceOption(_ && _)
-    val allFiles = table.prunedFilesAt(version, predicate)
-    val mapping = table.columnMappingAt(version)
+    val allFiles = snap.prunedFiles(predicate)
+    val mapping = snap.mapping
     // pending deletion vectors: the parquet scan is built with Spark's
     // reserved row-index column appended, and [[DvFilteredScan]] drops
     // the sidecar-named positions per file inside the readers — stats
     // pruning above stays sound (file stats include deleted rows:
     // conservative, may keep a file whose only matches are deleted)
-    val dvPos = table.dvPositionsAt(version)
+    val dvPos = table.dvPositions(snap)
     // pushed LIMIT (guaranteed filter-free): take manifest files in order
     // until their exact LIVE row counts (manifest rows minus pending DV
     // deletions) reach the bound — the rest are never opened. A file
@@ -964,7 +960,7 @@ class GraftScanBuilder(table: SnapshotTable, version: Long, tableSchema: StructT
       .getOption("spark.sql.sources.v2.bucketing.enabled").contains("true")
     if (!enabled) return None
     lazy val built = assemble(files)
-    table.bucketLayoutAt(version) match {
+    snap.bucketLayout match {
       case Some((n, cs, subs)) if files.nonEmpty &&
           files.forall(f => f.bucket.isDefined && f.bytes > 0) =>
         import org.apache.spark.sql.connector.expressions.Expressions
@@ -1120,7 +1116,7 @@ object GraftTimeFunction {
 }
 
 /** Delegating [[Scan]] that reports a CLEAN identity-routed bucket
- *  layout ([[SnapshotTable.bucketLayoutAt]]) as
+ *  layout ([[SnapshotTable.Snapshot.bucketLayout]]) as
  *  [[KeyGroupedPartitioning]]: one [[InputPartition]] per bucket
  *  (files grouped by their manifest-recorded bucket id, each partition
  *  carrying its key), read through the UNDERLYING parquet scan's
@@ -1534,13 +1530,12 @@ object GraftScanBuilder {
    *  aggregate can't be answered exactly from stats. */
   private[sql] def metadataAggregate(
       table: SnapshotTable,
-      version: Long,
-      schema: StructType,
+      snap: SnapshotTable.Snapshot,
       agg: Aggregation): Option[(StructType, Seq[Array[Any]])] = {
     // manifest row counts OVERCOUNT when deletion vectors are pending —
     // nothing exact is provable until they are purged
-    if (table.dvManifestAt(version).nonEmpty) return None
-    val files = table.prunedFilesAt(version, None)
+    if (snap.dvPaths.nonEmpty) return None
+    val (files, schema) = (snap.files, snap.schema)
     // rows == -1 marks a foreign/adopted file whose footer row count was
     // unreadable — nothing is provable from this manifest
     if (files.exists(_.rows < 0)) return None

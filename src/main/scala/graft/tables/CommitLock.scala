@@ -23,7 +23,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  *  - HDFS-compatible stores: `create(overwrite = false)` claims the
  *    slot atomically; content becomes visible at close (single writer
  *    per slot, so a reader seeing partial content can only be reading
- *    the torn NEWEST entry, which `currentReadable()` tolerates).
+ *    the torn NEWEST entry, which `readable()` tolerates).
  *
  * NEITHER branch is safe on plain object stores (S3/GCS/ABFS mounted
  * as a Hadoop FileSystem): hard links do not exist there, and

@@ -50,6 +50,15 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
  * (`iceberg/iceberg_scd_script.py:37` semantics), and orphaned data dirs
  * from failed writes are invisible and GC-able.
  *
+ * Snapshot resolution: every operation resolves the table state ONCE,
+ * as one immutable [[SnapshotTable.Snapshot]], and answers everything —
+ * schema, files, DVs, deltas, properties — from it. Writers use the
+ * strict head ([[latest]]): a torn newest slot fails the write rather
+ * than letting it build on an older version. Read-only APIs use the
+ * torn-tolerant head ([[readable]]), which falls back past a torn newest
+ * slot. History — time travel, the change feed, restore, tags, vacuum —
+ * uses [[snapshotAt]].
+ *
  * Scale notes (100 TB target):
  *  - `append` commits only the new files — no rewrite, O(1) data moved.
  *  - `upsert`/`merge` (graft.ops) rewrite only *touched* files
@@ -193,14 +202,35 @@ class SnapshotTable private (
     CommitEntry.fromJson(new String(bytes, "UTF-8"))
   }
 
+  /** The strict head — the writers' resolver: a torn newest slot throws
+   *  instead of letting a commit build on an older version. None for an
+   *  empty table. */
+  private[graft] def latest(): Option[Snapshot] = {
+    val v = currentVersion()
+    if (v < 0) None else Some(Snapshot(v, commitEntry(v)))
+  }
+
+  /** [[latest]] of a table that must not be empty. */
+  private[graft] def head(): Snapshot = required(latest())
+
+  /** The committed state at `version` — the history resolver (time
+   *  travel, change feed, restore, tags, vacuum). */
+  private[graft] def snapshotAt(version: Long): Snapshot =
+    if (version < 0) required(None) else Snapshot(version, commitEntry(version))
+
+  /** `s`, or the one empty-table failure every resolver shares. */
+  private[graft] def required(s: Option[Snapshot]): Snapshot =
+    s.getOrElse(throw new IllegalArgumentException(s"requirement failed: table $root is empty"))
+
   /**
-   * Newest version whose log entry parses, with its entry. Tolerates a
-   * TORN newest entry only (a concurrent non-local-FS writer has claimed
-   * the slot but not finished writing content): readers fall back to
-   * version n-1 instead of failing on partial JSON. Deeper corruption
-   * still throws — it is data loss, not a race.
+   * The torn-tolerant head — the read-only APIs' resolver: the newest
+   * version whose log entry parses. Tolerates a TORN newest entry only
+   * (a concurrent non-local-FS writer has claimed the slot but not
+   * finished writing content): readers fall back to version n-1 instead
+   * of failing on partial JSON. Deeper corruption still throws — it is
+   * data loss, not a race.
    */
-  private[graft] def currentReadable(): Option[(Long, CommitEntry)] = {
+  private[graft] def readable(): Option[Snapshot] = {
     // hint fast path: the newest version and (for the torn-head
     // fallback) its predecessor — the only two entries this method can
     // touch; the full listing is reserved for tables without a usable
@@ -214,11 +244,11 @@ class SnapshotTable private (
       case None => listVersions()
     }
     if (versions.isEmpty) return None
-    try Some((versions.last, commitEntry(versions.last)))
+    try Some(Snapshot(versions.last, commitEntry(versions.last)))
     catch {
       case NonFatal(e) if versions.size >= 2 =>
         val prev = versions(versions.size - 2)
-        Some((prev, commitEntry(prev)))
+        Some(Snapshot(prev, commitEntry(prev)))
     }
   }
 
@@ -244,7 +274,7 @@ class SnapshotTable private (
     val entry = entryIn.copy(ts = Some(System.currentTimeMillis()))
     fs.mkdirs(logDir)
     val dest = new Path(logDir, f"$version%020d.json")
-    try SnapshotTable.commitPhases.timed("cas")(
+    try graft.ext.PhaseLog.timed("cas")(
       commitLock.publish(fs, dest, tmpDir, entry.toJson.getBytes("UTF-8")))
     catch {
       case e: ConcurrentCommitException =>
@@ -313,8 +343,7 @@ class SnapshotTable private (
    *  property removes the artifact again (a stale path list is worse than
    *  none for external readers). Returns the manifest file path. */
   def generateSymlinkManifest(): String = {
-    val (_, entry) = currentReadable().getOrElse(
-      throw new IllegalArgumentException(s"requirement failed: table $root is empty"))
+    val entry = required(readable()).entry
     publishSymlinkManifest(entry.copy(properties =
       Some(entry.properties.getOrElse(Map.empty) + ("graft.symlink.manifest" -> "true"))))
     new Path(rootPath, "_symlink_format_manifest/manifest").toString
@@ -361,9 +390,8 @@ class SnapshotTable private (
    */
   private def applyIdentityColumns(
       df: DataFrame,
-      cur: Option[CommitEntry],
+      cur: Option[Snapshot],
       props: Map[String, String],
-      mapping: Map[String, String],
       strict: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, monotonically_increasing_id, raise_error, when}
     val ids = props.collect {
@@ -376,7 +404,7 @@ class SnapshotTable private (
       require(parts.length == 3, s"malformed identity spec for '$c': $spec")
       val (start, step, allow) = (parts(0).toLong, parts(1).toLong, parts(2).toBoolean)
       require(step != 0, s"identity column '$c': step must be non-zero")
-      val basis = identityBasis(cur, mapping.getOrElse(c, c), start, step)
+      val basis = identityBasis(cur, cur.fold(c)(_.mapping.getOrElse(c, c)), start, step)
       val assigned = (lit(basis) + lit(step) * monotonically_increasing_id())
       d.schema.fields.find(_.name.equalsIgnoreCase(c)) match {
         case None => d.withColumn(c, assigned)
@@ -404,16 +432,17 @@ class SnapshotTable private (
    *  unusable for the column force one bound scan; files where the
    *  column is all-NULL or absent constrain nothing. */
   private def identityBasis(
-      cur: Option[CommitEntry], c: String, start: Long, step: Long): Long = {
+      cur: Option[Snapshot], c: String, start: Long, step: Long): Long = {
     import org.apache.spark.sql.functions.{col, max, min}
-    val entries = cur.toSeq.flatMap(e => e.files ++ e.deltaFiles.getOrElse(Nil))
+    val snap = cur.getOrElse(return start)
+    val entries = snap.files ++ snap.entry.deltaFiles.getOrElse(Nil)
     if (entries.isEmpty) return start
     def pick(s: ColStats) = if (step > 0) s.max else s.min
     val unusable = entries.exists(e => e.rows < 0 ||
       (e.rows > 0 && !e.stats.contains(c)))
     val edge: Option[Long] =
       if (unusable) {
-        val row = read().agg(
+        val row = view(snap).agg(
           (if (step > 0) max(col(c)) else min(col(c))).cast("long")).head()
         if (row.isNullAt(0)) None else Some(row.getLong(0))
       } else {
@@ -493,22 +522,20 @@ class SnapshotTable private (
    *  `graft.bloom.ndv.<col>` pins the expected cardinality. Readers need
    *  no cooperation: Spark's parquet scan consults bloom filters during
    *  row-group filtering whenever a pushed equality predicate matches. */
-  private[graft] def writeDataDir(dfIn: DataFrame,
+  private def writeDataDir(dfIn: DataFrame,
+      cur: Option[Snapshot],
       mappingOverride: Option[Map[String, String]] = None,
       strictIdentity: Boolean = false,
       bucketRouted: Option[(Int, Seq[String], Seq[String])] = None,
       timeSubs: Seq[String] = Nil): Seq[FileEntry] = {
-    // one commit-log read serves the CHECK constraints, the bloom options,
-    // and the column mapping (object-store round trips per write matter)
-    val cur = currentReadable().map(_._2)
-    val props = cur.flatMap(_.properties).getOrElse(Map.empty)
-    val mapping = mappingOverride.getOrElse(
-      cur.flatMap(_.columnMapping).getOrElse(Map.empty))
+    // the operation's snapshot serves the CHECK constraints, the bloom
+    // options, and the column mapping
+    val props = cur.fold(Map.empty[String, String])(_.properties)
+    val mapping = mappingOverride.getOrElse(cur.fold(Map.empty[String, String])(_.mapping))
     val checked = enforceConstraints( // constraints are LOGICAL
       applyGeneratedColumns(
-        applyIdentityColumns(dfIn, cur, props,
-          cur.flatMap(_.columnMapping).getOrElse(Map.empty),
-          strict = strictIdentity), props), props)
+        applyIdentityColumns(dfIn, cur, props, strict = strictIdentity),
+        props), props)
     // files always carry PHYSICAL names so every live file stays uniform
     // across renames (full-rewrite paths pass Some(Map.empty) to reset
     // physical = logical)
@@ -589,7 +616,7 @@ class SnapshotTable private (
     val tsKey = "spark.sql.parquet.outputTimestampType"
     val prevTs = spark.conf.getOption(tsKey)
     spark.conf.set(tsKey, "TIMESTAMP_MICROS")
-    try SnapshotTable.commitPhases.timed("write_job")(writer.parquet(dir.toString))
+    try graft.ext.PhaseLog.timed("write_job")(writer.parquet(dir.toString))
     finally prevTs match {
       case Some(v) => spark.conf.set(tsKey, v)
       case None => spark.conf.unset(tsKey)
@@ -627,7 +654,7 @@ class SnapshotTable private (
     // footer stats come back keyed by the PHYSICAL names just written —
     // remap to logical so ALL commit metadata stays logically keyed
     val toLogical = mapping.map(_.swap)
-    val entries = SnapshotTable.commitPhases.timed("harvest")(readFooterStatsAll(
+    val entries = graft.ext.PhaseLog.timed("harvest")(readFooterStatsAll(
       fs.listStatus(dir).toSeq
         .filter(s => s.getPath.getName.endsWith(".parquet"))
         .sortBy(_.getPath.getName), conf,
@@ -721,19 +748,18 @@ class SnapshotTable private (
    *  The schema may change freely (full replace); table properties and
    *  the cluster spec carry forward. */
   def overwrite(df: DataFrame): SnapshotTable = {
-    val v = currentVersion()
-    val prior = if (v < 0) None else Some(commitEntry(v))
-    val spec = prior.flatMap(_.clusterBy).getOrElse(Nil)
+    val prior = latest()
+    val spec = prior.fold(Seq.empty[String])(_.clusterSpec)
     // full replace: write physical = logical and clear the column mapping
     // (renames are materialized), same lifecycle as the drop tombstones
-    val files = writeDataDir(applyCluster(df, spec), Some(Map.empty),
+    val files = writeDataDir(applyCluster(df, spec), prior, Some(Map.empty),
       strictIdentity = true, bucketRouted = routedBucket(df, spec),
       timeSubs = timeOnlySubs(df, spec))
     // a full replace leaves no file that could carry a dropped column's
     // old values — the drop-column tombstones have done their job
-    val props = prior.flatMap(_.properties)
+    val props = prior.flatMap(_.entry.properties)
       .map(_.filterNot(_._1.startsWith("graft.dropped."))).filter(_.nonEmpty)
-    writeCommit(v + 1,
+    writeCommit(prior.fold(0L)(_.version + 1),
       CommitEntry("overwrite", df.schema.json, files, toOpt(spec), props))
     this
   }
@@ -751,21 +777,14 @@ class SnapshotTable private (
       df: DataFrame, action: String = "overwrite",
       expectVersion: Option[Long] = None,
       rebaseDisjoint: Boolean = false): SnapshotTable = {
-    val v = currentVersion()
-    expectVersion.filter(_ != v).foreach { e =>
-      if (!rebaseDisjoint) throw new ConcurrentCommitException(
-        s"table $root advanced from version $e to $v since this $action was " +
-          "computed; retry against the fresh snapshot")
-    }
-    val v0 = expectVersion.getOrElse(v)
-    val prior = if (v0 < 0) None else Some(commitEntry(v0))
-    if (prior.exists(_.deltaFiles.exists(_.nonEmpty)))
+    val prior = computedAgainst(expectVersion, action, rebaseDisjoint)
+    if (prior.exists(_.entry.deltaFiles.exists(_.nonEmpty)))
       throw new IllegalStateException(
         s"table $root has pending MoR deltas; call applyDeltas() before a maintenance rewrite")
     // full replace: physical = logical again, mapping cleared (see overwrite)
-    val files = writeDataDir(df, Some(Map.empty))
+    val files = writeDataDir(df, prior, Some(Map.empty))
     // full replace: dropped-column tombstones are cleared (see overwrite)
-    val props = prior.flatMap(_.properties)
+    val props = prior.flatMap(_.entry.properties)
       .map(_.filterNot(_._1.startsWith("graft.dropped."))).filter(_.nonEmpty)
     // Z-ORDER's disjoint rebase (Delta's OPTIMIZE-vs-append rule): the
     // re-layout read the WHOLE v0 snapshot, so its sources are all of
@@ -775,45 +794,59 @@ class SnapshotTable private (
     // logical everywhere: with a column mapping or dropped-column
     // tombstones in play, this commit REWRITES that metadata, which the
     // carried appended files were written under — conflict instead.
-    val sources: Set[String] = prior.map(_.files.map(_.path).toSet).getOrElse(Set.empty)
+    val sources: Set[String] = prior.fold(Set.empty[String])(_.files.map(_.path).toSet)
     val rebaseOk = rebaseDisjoint &&
-      prior.forall(p => p.columnMapping.isEmpty &&
-        !p.properties.exists(_.keys.exists(_.startsWith("graft.dropped."))))
-    var baseV = v0
+      prior.forall(p => p.mapping.isEmpty &&
+        !p.properties.keys.exists(_.startsWith("graft.dropped.")))
+    var baseV = prior.fold(-1L)(_.version)
     var carried: Seq[FileEntry] = Nil
     var attempts = 0
     // maintenance re-layout: same rows, so commit the PRIOR schema —
     // the re-laid frame round-tripped through a parquet read, whose
     // widened nullability must not loosen the table schema (see
     // replaceFiles' commitSchemaJson)
-    val schemaJson = prior.map(_.schemaJson).getOrElse(df.schema.json)
+    val schemaJson = prior.fold(df.schema.json)(_.entry.schemaJson)
     while (true) {
       try {
         writeCommit(baseV + 1,
           CommitEntry(action, schemaJson, (carried ++ files).sortBy(_.path),
-            prior.flatMap(_.clusterBy), props,
+            prior.flatMap(_.entry.clusterBy), props,
             // a maintenance re-layout (the only caller) keeps the MoR
             // key/precombine TABLE config, like every replaceFiles
             // rewrite; deltas are guaranteed empty by the guard above
-            morKeys = prior.flatMap(_.morKeys),
-            morPrecombine = prior.flatMap(_.morPrecombine)))
+            morKeys = prior.flatMap(_.entry.morKeys),
+            morPrecombine = prior.flatMap(_.entry.morPrecombine)))
         return this
       } catch {
         case e: ConcurrentCommitException =>
           attempts += 1
-          val head = currentReadable()
+          val head = readable()
           if (!rebaseOk || attempts >= 5 ||
-              !head.exists { case (hv, h) =>
-                hv > baseV && prior.exists(p => maintenanceRebaseSafe(p, h, sources)) })
+              !head.exists(h => h.version > baseV &&
+                prior.exists(p => maintenanceRebaseSafe(p.entry, h.entry, sources))))
             throw e
-          val (hv, h) = head.get
           SnapshotTable.occStats.rebases.incrementAndGet()
-          baseV = hv
-          carried = h.files.filterNot(f => sources.contains(f.path))
+          baseV = head.get.version
+          carried = head.get.files.filterNot(f => sources.contains(f.path))
       }
     }
     this
   }
+
+  /** The snapshot a read-compute-commit operation computed against:
+   *  `expectVersion` when given — a head that has moved past it is a
+   *  conflict unless the caller may `rebase` — else the strict head. */
+  private def computedAgainst(
+      expectVersion: Option[Long], action: String, rebase: Boolean): Option[Snapshot] =
+    expectVersion match {
+      case None => latest()
+      case Some(e) =>
+        val v = currentVersion()
+        if (e != v && !rebase) throw new ConcurrentCommitException(
+          s"table $root advanced from version $e to $v since this $action was " +
+            "computed; retry against the fresh snapshot")
+        if (e < 0) None else Some(snapshotAt(e))
+    }
 
   /** Append-only commit: carries prior files forward, adds the new ones.
    *  The incoming frame is aligned BY NAME to the committed schema —
@@ -840,8 +873,7 @@ class SnapshotTable private (
    *  transaction log pages file actions.
    *  Returns (filesLoaded, rowsLoaded), both 0 on a no-op re-run. */
   def copyInto(stagingDir: String, format: String = "parquet"): (Int, Long) = {
-    val v = currentVersion()
-    require(v >= 0, s"table $root is empty")
+    val snap = head()
     val dir = new org.apache.hadoop.fs.Path(stagingDir)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val listed = fs.listStatus(dir).toSeq
@@ -852,9 +884,7 @@ class SnapshotTable private (
         n.startsWith("_") || n.startsWith(".")
       }
       .sorted
-    val entry = commitEntry(v)
-    val loadedProp = entry.properties.getOrElse(Map.empty)
-      .getOrElse(CopyLoadedProp, "")
+    val loadedProp = snap.properties.getOrElse(CopyLoadedProp, "")
     val loaded = if (loadedProp.isEmpty) Set.empty[String] else loadedProp.split("\n").toSet
     val fresh = listed.filterNot(loaded)
     if (fresh.isEmpty) (0, 0L)
@@ -865,15 +895,15 @@ class SnapshotTable private (
       // ConcurrentCommitException instead of silently building on — and
       // possibly erasing — a stale registry (exactly-once would break)
       appendAs(spark.read.format(format).load(fresh: _*), "copy-into",
-        expectVersion = Some(v),
+        expectVersion = Some(snap.version),
         extraProps = Map(
           CopyLoadedProp -> (loaded ++ fresh).toSeq.sorted.mkString("\n")))
       // with expectVersion set there is no rebase: OUR commit is exactly
       // v+1, so its file-list delta is precisely what this load wrote —
       // row counts from its harvested stats, no second scan, and no
       // contamination from interleaved commits
-      val beforePaths = entry.files.map(_.path).toSet
-      val rows = commitEntry(v + 1).files
+      val beforePaths = snap.files.map(_.path).toSet
+      val rows = snapshotAt(snap.version + 1).files
         .filterNot(f => beforePaths.contains(f.path)).map(_.rows).sum
       (fresh.length, rows)
     }
@@ -885,7 +915,8 @@ class SnapshotTable private (
       df: DataFrame, action: String, mergeSchema: Boolean = false,
       expectVersion: Option[Long] = None,
       extraProps: Map[String, String] = Map.empty): SnapshotTable = {
-    val v = currentVersion()
+    val prior = latest()
+    val v = prior.fold(-1L)(_.version)
     // expectVersion marks this append as NOT blind: the caller computed
     // `df` from a read of version `expectVersion` (read-compute-append),
     // so advancing past it is a real conflict — surface it and DISABLE
@@ -895,18 +926,16 @@ class SnapshotTable private (
         s"table $root advanced from version $e to $v since this $action was " +
           "computed; recompute against the fresh snapshot")
     }
-    val prior = if (v < 0) None else Some(commitEntry(v))
-    val committed = prior.map(e => DataType.fromJson(e.schemaJson).asInstanceOf[StructType])
-    val (aligned, schema) = committed match {
+    val (aligned, schema) = prior match {
       case None => (df, df.schema)
-      case Some(c) => alignToCommitted(df, c, mergeSchema)
+      case Some(p) => alignToCommitted(df, p.schema, mergeSchema)
     }
-    committed.foreach { c =>
-      val added = schema.fieldNames.filterNot(n => c.fieldNames.exists(_.equalsIgnoreCase(n)))
-      if (added.nonEmpty) assertResurrectionSafe(added, s"append to $root (mergeSchema)")
+    prior.foreach { p =>
+      val added = schema.fieldNames.filterNot(n => p.schema.fieldNames.exists(_.equalsIgnoreCase(n)))
+      if (added.nonEmpty) assertResurrectionSafe(p, added, s"append to $root (mergeSchema)")
     }
-    val spec = prior.flatMap(_.clusterBy).getOrElse(Nil)
-    val files = writeDataDir(applyCluster(aligned, spec), strictIdentity = true,
+    val spec = prior.fold(Seq.empty[String])(_.clusterSpec)
+    val files = writeDataDir(applyCluster(aligned, spec), prior, strictIdentity = true,
       bucketRouted = routedBucket(aligned, spec),
       timeSubs = timeOnlySubs(aligned, spec))
     // Optimistic-transaction retry (Delta's blind-append rule): an append
@@ -919,36 +948,34 @@ class SnapshotTable private (
     // write was validated against, so those still surface the
     // ConcurrentCommitException to the caller.
     var base = prior
-    var baseV = v
     var attempts = 0
     while (true) {
       try {
-        writeCommit(baseV + 1,
-          CommitEntry(action, schema.json, base.map(_.files).getOrElse(Nil) ++ files,
+        val b = base.map(_.entry)
+        writeCommit(base.fold(0L)(_.version + 1),
+          CommitEntry(action, schema.json, b.map(_.files).getOrElse(Nil) ++ files,
             toOpt(spec),
-            { val m = base.flatMap(_.properties).getOrElse(Map.empty) ++ extraProps
+            { val m = b.flatMap(_.properties).getOrElse(Map.empty) ++ extraProps
               if (m.isEmpty) None else Some(m) },
-            deltaFiles = base.flatMap(_.deltaFiles),
-            morKeys = base.flatMap(_.morKeys),
-            morPrecombine = base.flatMap(_.morPrecombine),
-            columnMapping = base.flatMap(_.columnMapping),
-            dvFiles = base.flatMap(_.dvFiles)))
+            deltaFiles = b.flatMap(_.deltaFiles),
+            morKeys = b.flatMap(_.morKeys),
+            morPrecombine = b.flatMap(_.morPrecombine),
+            columnMapping = b.flatMap(_.columnMapping),
+            dvFiles = b.flatMap(_.dvFiles)))
         return this
       } catch {
         case e: ConcurrentCommitException =>
           attempts += 1
           // torn-tolerant head read: the winner's entry may still be
-          // mid-write on HDFS-likes; currentReadable() falls back to the
-          // newest PARSEABLE entry, and the hv > baseV guard rethrows
+          // mid-write on HDFS-likes; readable() falls back to the newest
+          // PARSEABLE entry, and the version guard rethrows
           // (conservative) if that fallback is not actually ahead of us
-          val head = currentReadable()
+          val head = readable()
           if (expectVersion.isDefined || attempts >= 5 ||
-              !head.exists { case (hv, h) =>
-                hv > baseV && base.exists(b => appendRebaseSafe(b, h)) }) throw e
-          val (hv, h) = head.get
+              !head.exists(h => h.version > base.fold(-1L)(_.version) &&
+                base.exists(b => appendRebaseSafe(b.entry, h.entry)))) throw e
           SnapshotTable.occStats.rebases.incrementAndGet()
-          base = Some(h)
-          baseV = hv
+          base = head
       }
     }
     this
@@ -1035,10 +1062,7 @@ class SnapshotTable private (
    *  predicates prune files with no query rewrite (Iceberg's hidden
    *  partitioning promise); `bucket(n, col)` hash-groups rows for
    *  co-location and bounded file counts on high-cardinality keys. */
-  def clusterSpec(): Seq[String] = {
-    val v = currentVersion()
-    if (v < 0) Nil else commitEntry(v).clusterBy.getOrElse(Nil)
-  }
+  def clusterSpec(): Seq[String] = readable().fold(Seq.empty[String])(_.clusterSpec)
 
   private def toOpt(spec: Seq[String]): Option[List[String]] =
     if (spec.isEmpty) None else Some(spec.toList)
@@ -1121,7 +1145,7 @@ class SnapshotTable private (
 
   /** Action tag of the latest commit (None for an empty table). */
   def manifestAction(): Option[String] =
-    currentReadable().map(_._2.action)
+    readable().map(_.entry.action)
 
   /** Newest commit action satisfying `p`, scanning backwards with early
    *  exit — the streaming sinks' redelivery guard must find their own
@@ -1129,7 +1153,7 @@ class SnapshotTable private (
    *  (compact, applyDeltas, set-properties), not just at the head. */
   private[graft] def findRecentAction(p: String => Boolean): Option[String] =
     listVersions().reverseIterator
-      .map(v => scala.util.Try(commitEntry(v).action).toOption)
+      .map(v => scala.util.Try(snapshotAt(v).entry.action).toOption)
       .collectFirst { case Some(a) if p(a) => a }
 
   /** Replace the live file set with `keep` (paths from the current manifest,
@@ -1152,44 +1176,36 @@ class SnapshotTable private (
       rebaseDisjoint: Boolean = false,
       rebasePredicate: Option[Column] = None,
       commitSchemaJson: Option[String] = None): SnapshotTable = {
-    val v = currentVersion()
-    expectVersion.filter(_ != v).foreach { e =>
-      // maintenance commits (compact / purge-dv / compact-deltas) may
-      // instead try the disjoint-file rebase below, and row-level
-      // rewrites carrying a key-bounds `rebasePredicate` the
-      // disjoint-READ-SET rebase — the losing commit's slot CAS fails
-      // and routes through the same safety checks
-      if (!rebaseDisjoint && rebasePredicate.isEmpty)
-        throw new ConcurrentCommitException(
-          s"table $root advanced from version $e to $v since this $action was " +
-            "computed; retry against the fresh snapshot")
-    }
-    // the snapshot the caller COMPUTED against — under rebaseDisjoint the
-    // head may already be past it
-    val v0 = expectVersion.getOrElse(v)
-    val prior = if (v0 < 0) None else Some(commitEntry(v0))
+    // the snapshot the caller COMPUTED against. Maintenance commits
+    // (compact / purge-dv / compact-deltas) may find the head already
+    // past it and try the disjoint-file rebase below, and row-level
+    // rewrites carrying a key-bounds `rebasePredicate` the
+    // disjoint-READ-SET rebase — the losing commit's slot CAS fails and
+    // routes through the same safety checks
+    val prior = computedAgainst(expectVersion, action,
+      rebase = rebaseDisjoint || rebasePredicate.isDefined)
     // A row-level rewrite against the BASE while keyed deltas are pending
     // would silently resurrect overridden rows (the rewrite sees stale
     // values) — fold the deltas in first. The fold itself commits through
     // this path with the "compact-deltas" action, clearing the delta list.
-    if (action != "compact-deltas" && prior.exists(_.deltaFiles.exists(_.nonEmpty)))
+    if (action != "compact-deltas" && prior.exists(_.entry.deltaFiles.exists(_.nonEmpty)))
       throw new IllegalStateException(
         s"table $root has pending MoR deltas; call applyDeltas() before merge/delete/compact")
     val priorByPath: Map[String, FileEntry] =
-      prior.map(_.files.map(f => f.path -> f).toMap).getOrElse(Map.empty)
+      prior.fold(Map.empty[String, FileEntry])(_.files.map(f => f.path -> f).toMap)
     val kept = keep.map(p => priorByPath.getOrElse(p, FileEntry(p, -1L, -1L, Map.empty)))
     // the files this operation READ and is replacing — the op's read set,
     // which interleaved commits must have left untouched for a rebase
     val sources: Set[String] =
-      prior.map(_.files.map(_.path).toSet -- keep.toSet).getOrElse(Set.empty)
-    val spec = prior.flatMap(_.clusterBy).getOrElse(Nil)
-    val files = writeDataDir(applyCluster(df, spec, numFiles),
+      prior.fold(Set.empty[String])(_.files.map(_.path).toSet -- keep.toSet)
+    val spec = prior.fold(Seq.empty[String])(_.clusterSpec)
+    val files = writeDataDir(applyCluster(df, spec, numFiles), prior,
       bucketRouted = routedBucket(df, spec), timeSubs = timeOnlySubs(df, spec))
     // deletion vectors carry forward by default (rewritten files take new
     // names, so their stale DV rows are inert); a DV delete appends its
     // sidecar, a purge clears the list
     val dv = if (clearDvFiles) None
-      else toOpt(prior.flatMap(_.dvFiles).getOrElse(Nil) ++ addDvFiles)
+      else toOpt(prior.flatMap(_.entry.dvFiles).getOrElse(Nil) ++ addDvFiles)
     // Optimistic-transaction retry for MAINTENANCE rewrites (Delta's
     // disjoint-file conflict rule): a compaction/purge reads `sources`
     // and writes their replacement — losing the commit race to a commit
@@ -1199,7 +1215,7 @@ class SnapshotTable private (
     // (interleaved appends' files ride along untouched) and re-commit.
     // Anything else — metadata, a source file rewritten or removed, DV
     // or delta changes — still surfaces the conflict.
-    var baseV = v0
+    var baseV = prior.fold(-1L)(_.version)
     var carried = kept
     var attempts = 0
     // Schema-preserving rewrites (delete/update/compact/recluster/
@@ -1214,31 +1230,30 @@ class SnapshotTable private (
         writeCommit(baseV + 1,
           CommitEntry(action, schemaJson, (carried ++ files).sortBy(_.path),
             toOpt(spec),
-            prior.flatMap(_.properties),
+            prior.flatMap(_.entry.properties),
             // MoR key/precombine config is TABLE state (Hudi's table
             // config), not per-delta state: a CoW rewrite or the fold
             // itself clears the deltas but keeps the config
-            morKeys = prior.flatMap(_.morKeys),
-            morPrecombine = prior.flatMap(_.morPrecombine),
-            columnMapping = prior.flatMap(_.columnMapping),
+            morKeys = prior.flatMap(_.entry.morKeys),
+            morPrecombine = prior.flatMap(_.entry.morPrecombine),
+            columnMapping = prior.flatMap(_.entry.columnMapping),
             dvFiles = dv))
         return this
       } catch {
         case e: ConcurrentCommitException =>
           attempts += 1
-          val head = currentReadable()
-          val safe = attempts < 5 && head.exists { case (hv, h) =>
-            hv > baseV && prior.exists { p =>
-              if (rebaseDisjoint) maintenanceRebaseSafe(p, h, sources)
+          val head = readable()
+          val safe = attempts < 5 && head.exists { h =>
+            h.version > baseV && prior.exists { p =>
+              if (rebaseDisjoint) maintenanceRebaseSafe(p.entry, h.entry, sources)
               else rebasePredicate.exists(rp =>
-                rowRewriteRebaseSafe(p, h, sources, rp))
+                rowRewriteRebaseSafe(p.entry, h.entry, sources, rp))
             }
           }
           if (!safe) throw e
-          val (hv, h) = head.get
           SnapshotTable.occStats.rebases.incrementAndGet()
-          baseV = hv
-          carried = h.files.filterNot(f => sources.contains(f.path))
+          baseV = head.get.version
+          carried = head.get.files.filterNot(f => sources.contains(f.path))
       }
     }
     this
@@ -1297,7 +1312,7 @@ class SnapshotTable private (
    *  nullable (CASE-routed outputs), which is read-compatible both ways;
    *  any field/type/metadata difference (evolution, widening, renames)
    *  still compares unequal → conflict. */
-  private def sameLogicalSchema(a: String, b: String): Boolean = {
+  private def sameLogicalSchema(a: CommitEntry, b: CommitEntry): Boolean = {
     def norm(dt: DataType): DataType = dt match {
       case s: StructType => StructType(s.fields.map(f =>
         f.copy(dataType = norm(f.dataType), nullable = true)))
@@ -1305,14 +1320,14 @@ class SnapshotTable private (
       case MapType(k, v, _) => MapType(norm(k), norm(v), valueContainsNull = true)
       case other => other
     }
-    a == b || (try norm(DataType.fromJson(a)) == norm(DataType.fromJson(b))
+    a.schemaJson == b.schemaJson || (try norm(a.schema) == norm(b.schema)
     catch { case NonFatal(_) => false })
   }
 
   private[tables] def rowRewriteRebaseSafe(
       base: CommitEntry, head: CommitEntry, sources: Set[String],
       predicate: Column): Boolean =
-    sameLogicalSchema(head.schemaJson, base.schemaJson) &&
+    sameLogicalSchema(head, base) &&
       head.properties == base.properties &&
       !base.properties.exists(_.keys.exists(_.startsWith("graft.identity."))) &&
       head.clusterBy == base.clusterBy &&
@@ -1335,7 +1350,7 @@ class SnapshotTable private (
           live.contains(f.path) || sources.contains(f.path))
         val changed = added ++ removed
         changed.isEmpty || {
-          val schema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
+          val schema = head.schema
           val cs = Pruning.conjuncts(
             org.apache.spark.sql.graftshim.SparkInternals.expr(predicate))
           // a predicate with no stats-usable conjunct "may match" every
@@ -1349,7 +1364,7 @@ class SnapshotTable private (
   /** User table properties of the current snapshot (TBLPROPERTIES,
    *  `delta/delta_scd_script.py:43`); carried forward by every commit. */
   def properties(): Map[String, String] =
-    currentReadable().flatMap(_._2.properties).getOrElse(Map.empty)
+    readable().fold(Map.empty[String, String])(_.properties)
 
   /** Merge `props` into the table properties (`ALTER TABLE … SET
    *  TBLPROPERTIES`): a metadata-only commit — same files, same schema.
@@ -1358,10 +1373,8 @@ class SnapshotTable private (
    *  constraint the current data violates would poison every later
    *  rewrite that happens to touch a violating file. */
   def setProperties(props: Map[String, String]): SnapshotTable = {
-    val v = currentVersion()
-    require(v >= 0, s"table $root is empty")
-    val e = commitEntry(v)
-    val existing = e.properties.getOrElse(Map.empty)
+    val snap = head()
+    val existing = snap.properties
     val newChecks = props.collect {
       // only NEW or CHANGED constraints need validation — re-setting the
       // identical value (idempotent deploy scripts) must not re-scan
@@ -1374,14 +1387,14 @@ class SnapshotTable private (
       val anyViolated = newChecks
         .map { case (_, sql) => not(coalesce(expr(sql), lit(true))) } // NULL passes
         .reduce(_ || _)
-      if (read().filter(anyViolated).limit(1).count() > 0)
+      if (view(snap).filter(anyViolated).limit(1).count() > 0)
         throw new IllegalArgumentException(
           s"cannot add CHECK constraint(s) ${newChecks.map(_._1).mkString(", ")}: " +
             s"existing rows of $root violate " +
             newChecks.map { case (k, s) => s"$k ($s)" }.mkString(" or "))
     }
-    val merged = e.properties.getOrElse(Map.empty) ++ props
-    writeCommit(v + 1, e.copy(action = "set-properties",
+    val merged = existing ++ props
+    writeCommit(snap.version + 1, snap.entry.copy(action = "set-properties",
       properties = if (merged.isEmpty) None else Some(merged)))
     this
   }
@@ -1399,10 +1412,8 @@ class SnapshotTable private (
    * An empty spec clears clustering (`CLUSTER BY NONE`).
    */
   def setClusterSpec(spec: Seq[String]): SnapshotTable = {
-    val v = currentVersion()
-    require(v >= 0, s"table $root is empty")
-    val e = commitEntry(v)
-    val schema = DataType.fromJson(e.schemaJson).asInstanceOf[StructType]
+    val snap = head()
+    val schema = snap.schema
     spec.foreach { s =>
       ClusterTransform.sourceColumns(s).foreach { src =>
         require(schema.fieldNames.exists(_.equalsIgnoreCase(src)),
@@ -1410,14 +1421,13 @@ class SnapshotTable private (
             s"(table columns: ${schema.fieldNames.mkString(", ")})")
       }
     }
-    writeCommit(v + 1, e.copy(action = "set-cluster", clusterBy = toOpt(spec)))
+    writeCommit(snap.version + 1, snap.entry.copy(action = "set-cluster", clusterBy = toOpt(spec)))
     this
   }
 
   /** Remove table properties (`ALTER TABLE … UNSET TBLPROPERTIES`). */
   def unsetProperties(keys: Seq[String]): SnapshotTable = {
-    val v = currentVersion()
-    require(v >= 0, s"table $root is empty")
+    val snap = head()
     // graft.dropped.* tombstones are the column-resurrection guard, not
     // user metadata — removing one would let addColumns silently surface
     // stale pre-drop values from un-rewritten files
@@ -1425,9 +1435,8 @@ class SnapshotTable private (
     require(internal.isEmpty,
       s"cannot unset engine-internal propert${if (internal.size == 1) "y" else "ies"} " +
         internal.mkString(", "))
-    val e = commitEntry(v)
-    val remaining = e.properties.getOrElse(Map.empty) -- keys
-    writeCommit(v + 1, e.copy(action = "set-properties",
+    val remaining = snap.properties -- keys
+    writeCommit(snap.version + 1, snap.entry.copy(action = "set-properties",
       properties = if (remaining.isEmpty) None else Some(remaining)))
     this
   }
@@ -1438,16 +1447,14 @@ class SnapshotTable private (
    *  (the same mechanism as append-side `mergeSchema`). Added columns are
    *  forced nullable for exactly that reason. */
   def addColumns(cols: Seq[StructField]): SnapshotTable = {
-    val v = currentVersion()
-    require(v >= 0, s"table $root is empty")
-    val e = commitEntry(v)
-    val committed = DataType.fromJson(e.schemaJson).asInstanceOf[StructType]
+    val snap = head()
+    val committed = snap.schema
     val dup = cols.filter(c => committed.fieldNames.exists(_.equalsIgnoreCase(c.name)))
     require(dup.isEmpty,
       s"ALTER TABLE $root ADD COLUMNS: column(s) already exist: ${dup.map(_.name).mkString(", ")}")
-    assertResurrectionSafe(cols.map(_.name), s"ALTER TABLE $root ADD COLUMNS")
+    assertResurrectionSafe(snap, cols.map(_.name), s"ALTER TABLE $root ADD COLUMNS")
     val evolved = StructType(committed.fields ++ cols.map(_.copy(nullable = true)))
-    writeCommit(v + 1, e.copy(action = "add-columns", schemaJson = evolved.json))
+    writeCommit(snap.version + 1, snap.entry.copy(action = "add-columns", schemaJson = evolved.json))
     this
   }
 
@@ -1456,9 +1463,9 @@ class SnapshotTable private (
    *  live files may still physically carry a [[dropColumns]]-dropped
    *  column, so re-introducing the name would read their STALE values
    *  instead of NULL. Throws until a full rewrite clears the tombstone. */
-  private[graft] def assertResurrectionSafe(names: Seq[String], context: String): Unit = {
-    val entry = currentReadable().map(_._2)
-    val props = entry.flatMap(_.properties).getOrElse(Map.empty)
+  private[graft] def assertResurrectionSafe(
+      snap: Snapshot, names: Seq[String], context: String): Unit = {
+    val props = snap.properties
     val hit = names.filter(n => props.contains(s"graft.dropped.${n.toLowerCase}"))
     require(hit.isEmpty,
       s"$context: column(s) ${hit.mkString(", ")} were previously dropped and " +
@@ -1467,7 +1474,7 @@ class SnapshotTable private (
         "first to rewrite them")
     // live files also still carry a RENAMED column's physical name — a new
     // logical column claiming that name would read the renamed column's data
-    val phys = entry.flatMap(_.columnMapping).getOrElse(Map.empty).values.toSeq
+    val phys = snap.mapping.values.toSeq
     val clash = names.filter(n => phys.exists(_.equalsIgnoreCase(n)))
     require(clash.isEmpty,
       s"$context: column(s) ${clash.mkString(", ")} collide with the physical " +
@@ -1485,10 +1492,9 @@ class SnapshotTable private (
    *  ([[overwrite]] / ZORDER optimize) clears the tombstones. */
   def dropColumns(names: Seq[String]): SnapshotTable = {
     require(names.nonEmpty, "dropColumns needs at least one column")
-    val v = currentVersion()
-    require(v >= 0, s"table $root is empty")
-    val e = commitEntry(v)
-    val committed = DataType.fromJson(e.schemaJson).asInstanceOf[StructType]
+    val snap = head()
+    val e = snap.entry
+    val committed = snap.schema
     val missing = names.filterNot(n => committed.fieldNames.exists(_.equalsIgnoreCase(n)))
     require(missing.isEmpty,
       s"ALTER TABLE $root DROP COLUMNS: no such column(s): ${missing.mkString(", ")}")
@@ -1508,14 +1514,13 @@ class SnapshotTable private (
         "the cluster spec, MoR spec, the change-feed key, or a CHECK constraint")
     // tombstone the PHYSICAL name — that is what live files still carry
     // (equals the logical name unless the column was renamed)
-    val mapping = mappingOf(e)
     val tombs = names.map { n =>
       val exact = committed.fields.find(_.name.equalsIgnoreCase(n)).map(_.name).getOrElse(n)
-      s"graft.dropped.${mapping.getOrElse(exact, exact).toLowerCase}" -> v.toString
+      s"graft.dropped.${snap.mapping.getOrElse(exact, exact).toLowerCase}" -> snap.version.toString
     }.toMap
-    val mapping2 = mapping.filterNot { case (l, _) =>
+    val mapping2 = snap.mapping.filterNot { case (l, _) =>
       names.exists(_.equalsIgnoreCase(l)) }
-    writeCommit(v + 1, e.copy(action = "drop-columns",
+    writeCommit(snap.version + 1, e.copy(action = "drop-columns",
       schemaJson = StructType(remaining).json,
       properties = Some(e.properties.getOrElse(Map.empty) ++ tombs),
       columnMapping = Some(mapping2).filter(_.nonEmpty)))
@@ -1534,12 +1539,11 @@ class SnapshotTable private (
    *  are refused (the constraint's SQL text cannot be rewritten
    *  reliably — drop and re-add the constraint around the rename). */
   def renameColumn(oldName: String, newName: String): SnapshotTable = {
-    val v = currentVersion()
-    require(v >= 0, s"table $root is empty")
+    val snap = head()
     require(newName.trim.nonEmpty && !newName.contains("."),
       s"ALTER TABLE $root RENAME COLUMN: invalid new name: '$newName'")
-    val e = commitEntry(v)
-    val committed = DataType.fromJson(e.schemaJson).asInstanceOf[StructType]
+    val e = snap.entry
+    val committed = snap.schema
     val field = committed.fields.find(_.name.equalsIgnoreCase(oldName)).getOrElse(
       throw new IllegalArgumentException(
         s"ALTER TABLE $root RENAME COLUMN: no such column: $oldName"))
@@ -1557,7 +1561,7 @@ class SnapshotTable private (
       s"ALTER TABLE $root RENAME COLUMN: $newName was previously dropped and " +
         "live files may still carry the old values; overwrite or OPTIMIZE " +
         "ZORDER the table first to rewrite them")
-    val otherPhys = (mappingOf(e) - field.name).values.toSeq
+    val otherPhys = (snap.mapping - field.name).values.toSeq
     require(!otherPhys.exists(_.equalsIgnoreCase(newName)),
       s"ALTER TABLE $root RENAME COLUMN: $newName collides with the physical " +
         "name of another renamed column; overwrite or OPTIMIZE ZORDER the " +
@@ -1570,11 +1574,10 @@ class SnapshotTable private (
     def rnStats(files: Seq[FileEntry]): Seq[FileEntry] = files.map(fe =>
       fe.copy(stats = fe.stats.map { case (k, s) => rn(k) -> s },
         blooms = fe.blooms.map(_.map { case (k, b) => rn(k) -> b })))
-    val mapping = mappingOf(e)
-    val physical = mapping.getOrElse(field.name, field.name)
+    val physical = snap.mapping.getOrElse(field.name, field.name)
     // identity entries carry no information — dropping them keeps the
     // mapping empty (and every fast path untouched) for round-trip renames
-    val mapping2 = ((mapping - field.name) + (newName -> physical))
+    val mapping2 = ((snap.mapping - field.name) + (newName -> physical))
       .filter { case (l, p) => l != p }
     val schema2 = StructType(committed.fields.map(f =>
       if (f.name == field.name) f.copy(name = newName) else f))
@@ -1587,7 +1590,7 @@ class SnapshotTable private (
         s"graft.bloom.ndv.${newName.toLowerCase}" -> value
       case kv => kv
     })
-    writeCommit(v + 1, e.copy(action = "rename-column",
+    writeCommit(snap.version + 1, e.copy(action = "rename-column",
       schemaJson = schema2.json,
       files = rnStats(e.files),
       deltaFiles = e.deltaFiles.map(rnStats),
@@ -1614,11 +1617,13 @@ class SnapshotTable private (
   /** The widening checks of [[widenColumnType]] without the commit —
    *  multi-change ALTER statements pre-validate every change before the
    *  first one commits, so a doomed statement leaves no partial state. */
-  private[graft] def validateWidening(name: String, newType: DataType): Unit = {
-    val v = currentVersion()
-    require(v >= 0, s"table $root is empty")
-    val committed = DataType.fromJson(commitEntry(v).schemaJson).asInstanceOf[StructType]
-    val field = committed.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
+  private[graft] def validateWidening(name: String, newType: DataType): Unit =
+    widenedField(head(), name, newType)
+
+  /** The committed field `name` resolves to, once the widening to
+   *  `newType` is checked lossless. */
+  private def widenedField(snap: Snapshot, name: String, newType: DataType): StructField = {
+    val field = snap.schema.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
       throw new IllegalArgumentException(
         s"ALTER TABLE $root ALTER COLUMN: no such column: $name"))
     require(Widening.isLossless(field.dataType, newType),
@@ -1626,24 +1631,22 @@ class SnapshotTable private (
         s"${field.dataType.simpleString} -> ${newType.simpleString} is not a " +
         "lossless widening (allowed: byte/short/int -> long, " +
         "byte/short/int -> double, float -> double)")
+    field
   }
 
   def widenColumnType(name: String, newType: DataType): SnapshotTable = {
-    validateWidening(name, newType)
-    val v = currentVersion()
-    val e = commitEntry(v)
-    val committed = DataType.fromJson(e.schemaJson).asInstanceOf[StructType]
-    val field = committed.fields.find(_.name.equalsIgnoreCase(name)).get
-    val schema2 = StructType(committed.fields.map(f =>
+    val snap = head()
+    val field = widenedField(snap, name, newType)
+    val schema2 = StructType(snap.schema.fields.map(f =>
       if (f.name == field.name) f.copy(dataType = newType) else f))
-    writeCommit(v + 1, e.copy(action = "widen-type", schemaJson = schema2.json))
+    writeCommit(snap.version + 1, snap.entry.copy(action = "widen-type", schemaJson = schema2.json))
     this
   }
 
   /** Column names referenced by any `graft.constraint.*` CHECK expression
    *  (conservatively ALL table columns when one fails to parse). */
   private def constraintColumns(e: CommitEntry): Seq[String] = {
-    val all = DataType.fromJson(e.schemaJson).asInstanceOf[StructType].fieldNames.toSeq
+    val all = e.schema.fieldNames.toSeq
     e.properties.getOrElse(Map.empty).collect {
       case (k, sql) if k.startsWith("graft.constraint.") =>
         try spark.sessionState.sqlParser.parseExpression(sql).collect {
@@ -1659,33 +1662,20 @@ class SnapshotTable private (
    *  ([[upsertDeferred]]) are resolved against the base, latest version
    *  of each record key wins. Readers never observe partial writes
    *  (a torn newest log entry falls back to the prior version,
-   *  [[currentReadable]]). */
-  def read(): DataFrame = {
-    val (_, entry) = currentReadable().getOrElse(
-      throw new IllegalArgumentException(s"requirement failed: table $root is empty"))
-    mergedView(entry, entry.files)
-  }
+   *  [[readable]]). */
+  def read(): DataFrame = view(required(readable()))
 
   /** READ-OPTIMIZED view: base files only, pending deltas ignored —
    *  Hudi's `_ro` table (`hudi/hudi_scd_script.py` reads the `_rt`
    *  counterpart; SURVEY.md §2.6). Identical to [[read]] when no deltas
    *  are pending. */
   def readBase(): DataFrame = {
-    val (_, entry) = currentReadable().getOrElse(
-      throw new IllegalArgumentException(s"requirement failed: table $root is empty"))
+    val snap = required(readable())
     // deletion vectors are BASE state (the rows are deleted, not
     // deferred), so the read-optimized view applies them too
-    dvRemoveOver(entry, entry.files.map(_.path),
-      DataType.fromJson(entry.schemaJson).asInstanceOf[StructType],
-      mappingOf(entry))
+    readFilesAs(snap, snap.files.map(_.path), snap.schema)
   }
 
-  /** Base ∪ pending-delta assembly (the MoR read-time merge): base rows
-   *  whose record key appears in a delta are replaced by the delta's
-   *  latest version — one anti-join + one key-agg over the (small) delta
-   *  set; the base side stays a plain pruned parquet scan. Keys whose
-   *  winning delta row is a delete tombstone ([[deleteDeferred]]) are
-   *  anti-joined away and contribute no replacement row. */
   /** Anti-join `entry`'s deletion vectors out of a base-file scan `df`.
    *  `df` must be a (projection over a) parquet file relation — the
    *  `_metadata` struct resolves through projections but not joins. The
@@ -1694,9 +1684,9 @@ class SnapshotTable private (
    *  the 100 TB base side never shuffles. Name-keyed, so a scan over any
    *  SUBSET of files is filtered correctly and rewritten files (new
    *  names) are never hit by stale DV rows. */
-  private def dvRemove(entry: CommitEntry, df: DataFrame): DataFrame = {
+  private def dvRemove(snap: Snapshot, df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    val dvs = entry.dvFiles.getOrElse(Nil)
+    val dvs = snap.entry.dvFiles.getOrElse(Nil)
     if (dvs.isEmpty) return df
     val dv = spark.read.schema(SnapshotTable.DvSchema).parquet(dvs.map(_.path): _*)
     df.withColumn(SnapshotTable.DvFileCol, col("_metadata.file_name"))
@@ -1706,23 +1696,37 @@ class SnapshotTable private (
       .drop(SnapshotTable.DvFileCol, SnapshotTable.DvPosCol)
   }
 
-  /** [[dvRemove]] guarded for possibly-empty file lists (an empty scan is
-   *  a LocalRelation with no `_metadata` to resolve). */
-  private def dvRemoveOver(entry: CommitEntry, paths: Seq[String],
-      schema: StructType, mapping: Map[String, String]): DataFrame = {
-    val df = dfOver(paths, schema, mapping)
-    if (paths.isEmpty) df else dvRemove(entry, df)
+  /** Read a subset of `snap`'s live files as `schema` — physical names
+   *  mapped back to logical per its column mapping, its deletion vectors
+   *  applied (a rewrite reading raw file bytes would resurrect DV-deleted
+   *  rows). `schema` may be wider than the committed schema (MERGE WITH
+   *  SCHEMA EVOLUTION); extra fields have no mapping entry and null-fill
+   *  as usual. [[dvRemove]] is skipped for an empty file list (an empty
+   *  scan is a LocalRelation with no `_metadata` to resolve). */
+  private[graft] def readFilesAs(snap: Snapshot, paths: Seq[String],
+      schema: StructType): DataFrame = {
+    val df = dfOver(paths, schema, snap.mapping)
+    if (paths.isEmpty) df else dvRemove(snap, df)
   }
 
-  private def mergedView(entry: CommitEntry, baseFiles: Seq[FileEntry]): DataFrame = {
+  /** The real-time view of `snap`: its live files with deletion vectors
+   *  and pending MoR deltas applied. */
+  private[graft] def view(snap: Snapshot): DataFrame = mergedView(snap, snap.files)
+
+  /** Base ∪ pending-delta assembly (the MoR read-time merge): base rows
+   *  whose record key appears in a delta are replaced by the delta's
+   *  latest version — one anti-join + one key-agg over the (small) delta
+   *  set; the base side stays a plain pruned parquet scan. Keys whose
+   *  winning delta row is a delete tombstone ([[deleteDeferred]]) are
+   *  anti-joined away and contribute no replacement row. */
+  private def mergedView(snap: Snapshot, baseFiles: Seq[FileEntry]): DataFrame = {
     import org.apache.spark.sql.functions._
-    val schema = DataType.fromJson(entry.schemaJson).asInstanceOf[StructType]
-    val base = dvRemoveOver(entry, baseFiles.map(_.path), schema, mappingOf(entry))
-    val deltaEntries = entry.deltaFiles.getOrElse(Nil)
+    val base = readFilesAs(snap, baseFiles.map(_.path), snap.schema)
+    val deltaEntries = snap.entry.deltaFiles.getOrElse(Nil)
     if (deltaEntries.isEmpty) return base
-    val keys = entry.morKeys.getOrElse(Nil)
-    val winners = latestDeltaRows(deltaEntries, schema, keys,
-      entry.morPrecombine.get, mappingOf(entry))
+    val keys = snap.entry.morKeys.getOrElse(Nil)
+    val winners = latestDeltaRows(deltaEntries, snap.schema, keys,
+      snap.entry.morPrecombine.get, snap.mapping)
     base.join(winners.select(keys.map(col): _*), keys, "left_anti")
       .unionByName(winners.filter(!col(SnapshotTable.DeleteMarker))
         .drop(SnapshotTable.DeleteMarker))
@@ -1770,11 +1774,7 @@ class SnapshotTable private (
 
   /** Time travel (reference formats' snapshot isolation made explicit);
    *  deltas pending AT that version are resolved, like [[read]]. */
-  def readVersion(version: Long): DataFrame = {
-    require(version >= 0, s"table $root is empty")
-    val entry = commitEntry(version)
-    mergedView(entry, entry.files)
-  }
+  def readVersion(version: Long): DataFrame = view(snapshotAt(version))
 
   /** The committed LOGICAL schema at `version` — the read/scan contract,
    *  straight from the manifest. One O(manifest) parse, NEVER a
@@ -1783,10 +1783,7 @@ class SnapshotTable private (
    *  per file — at 512 files that was ~0.9 s of planning per catalog
    *  query, and a 100 TB manifest would turn every loadTable into a
    *  full-listing stall). */
-  def schemaAt(version: Long): StructType = {
-    require(version >= 0, s"table $root is empty")
-    DataType.fromJson(commitEntry(version).schemaJson).asInstanceOf[StructType]
-  }
+  def schemaAt(version: Long): StructType = snapshotAt(version).schema
 
   /** Newest version committed at or before `tsMillis` — the resolver
    *  behind timestamp-based time travel (`TIMESTAMP AS OF`, supported by
@@ -1795,7 +1792,7 @@ class SnapshotTable private (
    *  a commit timestamp (pre-ts logs) are treated as arbitrarily old. */
   def versionAsOf(tsMillis: Long): Long = {
     val eligible = listVersions().filter { v =>
-      try commitEntry(v).ts.forall(_ <= tsMillis)
+      try snapshotAt(v).entry.ts.forall(_ <= tsMillis)
       catch { case NonFatal(_) => false } // torn newest entry: not eligible
     }
     require(eligible.nonEmpty,
@@ -1814,7 +1811,7 @@ class SnapshotTable private (
    *  mis-align whenever history skips a torn entry vacuum still counts. */
   private[graft] def versionsSince(cutoffMillis: Long): Int =
     listVersions().reverse.takeWhile { v =>
-      try commitEntry(v).ts.forall(_ >= cutoffMillis)
+      try snapshotAt(v).entry.ts.forall(_ >= cutoffMillis)
       catch { case NonFatal(_) => true }
     }.size
 
@@ -1833,37 +1830,16 @@ class SnapshotTable private (
           .col(mapping.getOrElse(f.name, f.name)).as(f.name)): _*)
     }
 
-  /** The logical→physical column mapping of one commit (empty = identity). */
-  private def mappingOf(e: CommitEntry): Map[String, String] =
-    e.columnMapping.getOrElse(Map.empty)
-
-  /** Read a subset of the CURRENT snapshot's live files as `schema` —
-   *  physical names mapped back to logical per the current column
-   *  mapping. `schema` may be wider than the committed schema (MERGE
-   *  WITH SCHEMA EVOLUTION); extra fields have no mapping entry and
-   *  null-fill as usual. */
-  private[graft] def readFilesAs(paths: Seq[String], schema: StructType): DataFrame =
-    currentReadable() match {
-      // current deletion vectors apply: a rewrite (MERGE) reading raw
-      // file bytes would resurrect DV-deleted rows
-      case Some((_, e)) => dvRemoveOver(e, paths, schema, mappingOf(e))
-      case None => dfOver(paths, schema)
-    }
-
   /** [[readFilesAs]] with per-row file lineage captured into `fileCol`
    *  (from `_metadata.file_path`, a URI string) BEFORE the DV anti-join —
    *  `input_file_name()` over the joined plan would come back empty.
    *  MERGE's touched-file discovery is the consumer. */
   private[graft] def readFilesWithLineage(
-      paths: Seq[String], schema: StructType, fileCol: String): DataFrame = {
+      snap: Snapshot, paths: Seq[String], schema: StructType, fileCol: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    currentReadable() match {
-      case Some((_, e)) if paths.nonEmpty =>
-        dvRemove(e, dfOver(paths, schema, mappingOf(e))
-          .withColumn(fileCol, col("_metadata.file_path")))
-      case _ =>
-        dfOver(paths, schema).withColumn(fileCol, lit(null).cast(StringType))
-    }
+    if (paths.isEmpty) dfOver(paths, schema).withColumn(fileCol, lit(null).cast(StringType))
+    else dvRemove(snap, dfOver(paths, schema, snap.mapping)
+      .withColumn(fileCol, col("_metadata.file_path")))
   }
 
   /**
@@ -1876,72 +1852,21 @@ class SnapshotTable private (
    * by Catalyst (and pushed to the parquet reader) afterwards.
    */
   def scan(predicate: Column): DataFrame = {
-    val (_, entry) = currentReadable().getOrElse(
-      throw new IllegalArgumentException(s"requirement failed: table $root is empty"))
-    val schema = DataType.fromJson(entry.schemaJson).asInstanceOf[StructType]
-    val pred = org.apache.spark.sql.graftshim.SparkInternals.expr(predicate)
-    val cs = Pruning.conjuncts(pred)
-    val keep = entry.files.filter(f => Pruning.mayMatchConjuncts(f, cs, schema))
+    val snap = required(readable())
     // Base-file pruning stays sound under pending deltas: a pruned base
     // row either fails `predicate` post-merge anyway or is replaced by a
     // delta row, and the delta side is never pruned here.
-    mergedView(entry, keep).filter(predicate)
+    mergedView(snap, snap.prunedFiles(Some(predicate))).filter(predicate)
   }
 
   /** Files [[scan]] would read for `predicate` — exposed for tests/EXPLAIN. */
-  def prunedManifest(predicate: Column): Seq[String] = {
-    val v = currentVersion()
-    if (v < 0) return Nil
-    prunedFilesAt(v, Some(predicate)).map(_.path)
-  }
-
-  /** Stats-pruned file entries of `version` (all files when `predicate` is
-   *  empty) — the hook the DSv2 catalog scan uses to hand Spark's native
-   *  parquet reader exactly the files that may match. */
-  private[graft] def prunedFilesAt(version: Long, predicate: Option[Column]): Seq[FileEntry] = {
-    val entry = commitEntry(version)
-    predicate match {
-      case None => entry.files
-      case Some(p) =>
-        val schema = DataType.fromJson(entry.schemaJson).asInstanceOf[StructType]
-        val expr = org.apache.spark.sql.graftshim.SparkInternals.expr(p)
-        val cs = Pruning.conjuncts(expr)
-        entry.files.filter(f => Pruning.mayMatchConjuncts(f, cs, schema))
-    }
-  }
+  def prunedManifest(predicate: Column): Seq[String] =
+    readable().fold(Seq.empty[String])(_.prunedFiles(Some(predicate)).map(_.path))
 
   /** Current-snapshot file paths that may contain at least one of `keys`
-   *  in `column` — the Hudi bloom-index "tagging" step
-   *  (`hoodie.index.type=BLOOM`) that keyed MERGE discovery uses to
-   *  touch only key-hit files. Per key, the stats-domain value and the
-   *  two bloom hash passes compute once ([[Pruning.prepKeyProbes]]);
-   *  each file then pays a range check plus a filter probe per key with
-   *  early exit on the first possible hit. Strictly sharper than one
-   *  global [min(keys), max(keys)] overlap test: scattered keys prune
-   *  the gap files too, and manifest blooms prune files whose key range
-   *  fully overlaps (interleaved clustering). Conservative everywhere —
-   *  files without stats or filters always stay. */
-  private[graft] def keyProbedManifest(column: String, keys: Seq[Any]): Seq[String] = {
-    val v = currentVersion()
-    if (v < 0) Nil
-    else keyProbedPaths(commitEntry(v), column, keys)
-  }
-
-  private def keyProbedPaths(
-      entry: CommitEntry, column: String, keys: Seq[Any]): Seq[String] = {
-    // ZERO keys match zero files — without this, the empty set falls into
-    // the conservative no-usable-probes branch below and returns the FULL
-    // manifest, turning a no-collision probe (the steady state of an
-    // all-novel ingest batch) into a whole-index scan per call
-    if (keys.isEmpty) return Nil
-    val schema = DataType.fromJson(entry.schemaJson).asInstanceOf[StructType]
-    val probes = SnapshotTable.resolveField(schema, column)
-      .map(f => Pruning.prepKeyProbes(keys, f.dataType)).getOrElse(Nil)
-    if (probes.isEmpty) entry.files.map(_.path)
-    else entry.files
-      .filter(f => Pruning.fileMayContainAnyKey(f, column, probes, schema))
-      .map(_.path)
-  }
+   *  in `column` ([[Snapshot.keyProbedPaths]]). */
+  private[graft] def keyProbedManifest(column: String, keys: Seq[Any]): Seq[String] =
+    readable().fold(Seq.empty[String])(_.keyProbedPaths(column, keys))
 
   /** Raw read of only the files that may contain one of `keys` in
    *  `column` ([[keyProbedManifest]]) — the serve path of the persisted
@@ -1959,17 +1884,16 @@ class SnapshotTable private (
     // one snapshot resolution serves both the overlay check and the
     // prune — checking one version and pruning another would let a
     // commit landing in between slip an overlay past the refusal
-    val v = currentVersion()
-    if (v < 0) return read().limit(0)
-    val e = commitEntry(v)
+    val snap = required(readable())
+    val e = snap.entry
     require(e.dvFiles.forall(_.isEmpty) && e.deltaFiles.forall(_.isEmpty) &&
         e.columnMapping.forall(_.isEmpty),
       s"table $root carries row-level overlays (deletion vectors / MoR deltas) " +
         "or column mapping — a key-probed raw read serves data files directly " +
         "and would miss them; index tables are append-only by contract " +
         "(compact or rebuild the index table before serving)")
-    val keep = keyProbedPaths(e, column, keys).toSet
-    if (keep.isEmpty) read().limit(0)
+    val keep = snap.keyProbedPaths(column, keys).toSet
+    if (keep.isEmpty) view(snap).limit(0)
     else {
       // metadata-served read: the manifest knows every surviving file's
       // exact length, so the relation builds with ZERO filesystem round
@@ -1977,39 +1901,8 @@ class SnapshotTable private (
       // paths, launched a listing JOB per probe (two per indexed serve:
       // band + signature), pure plan-time overhead on the serve hot path
       val ents = e.files.filter(f => keep(f.path))
-      val schema = DataType.fromJson(e.schemaJson).asInstanceOf[StructType]
       org.apache.spark.sql.graftshim.SparkInternals.parquetOver(
-        spark, new graft.sql.ManifestFileIndex(spark, ents), schema)
-    }
-  }
-
-  /** Logical→physical column mapping AT a version (empty = identity;
-   *  the DSv2 scan consults the PINNED snapshot's mapping). */
-  private[graft] def columnMappingAt(version: Long): Map[String, String] =
-    if (version < 0) Map.empty else mappingOf(commitEntry(version))
-
-  /** Some((numBuckets, key columns)) when the snapshot at `version` is
-   *  a CLEAN identity-routed bucket layout: the cluster spec is exactly
-   *  one bucket transform (single- or composite-key) and EVERY live file records a valid bucket id
-   *  (written through [[applyCluster]]'s routed path) with a known
-   *  size, and no MoR deltas ride the commit. This is the
-   *  precondition for the DSv2 scan to report KeyGroupedPartitioning
-   *  (storage-partitioned join); any file predating the layout — or a
-   *  pending delta overlay, whose keyed merge is not a per-file
-   *  operation — degrades to an unreported scan (a shuffle plan, never
-   *  a wrong answer). Deletion vectors do NOT un-report the layout:
-   *  the DSv2 scan applies DV positions per file inside its readers
-   *  ([[dvPositionsAt]]), and a delete never moves a row between
-   *  buckets, so the grouping stays exact — a long-lived bucketed fact
-   *  table keeps its shuffle-free joins while carrying DVs (Iceberg's
-   *  positional-delete + SPJ behavior). */
-  private[graft] def bucketLayoutAt(version: Long): Option[(Int, Seq[String], Seq[String])] = {
-    if (version < 0) return None
-    val e = commitEntry(version)
-    ClusterTransform.routedSpec(e.clusterBy.getOrElse(Nil)).filter { case (n, _, _) =>
-      e.files.nonEmpty &&
-        e.files.forall(f => f.bytes > 0 && f.bucket.exists(b => b >= 0 && b < n)) &&
-        e.deltaFiles.forall(_.isEmpty)
+        spark, new graft.sql.ManifestFileIndex(spark, ents), snap.schema)
     }
   }
 
@@ -2076,19 +1969,14 @@ class SnapshotTable private (
       if tlo == SnapshotTable.TimeTrunc.truncMicros(hi, unit)
     } yield tlo
 
-  def schema: StructType =
-    DataType.fromJson(currentReadable()
-      .getOrElse(throw new IllegalArgumentException(s"requirement failed: table $root is empty"))
-      ._2.schemaJson).asInstanceOf[StructType]
+  def schema: StructType = required(readable()).schema
 
   /** Live file list of the current snapshot (the "manifest" — the analogue
    *  of Delta's symlink_format_manifest, `delta/delta_scd_script.py:42-43`). */
-  def manifest(): Seq[String] =
-    currentReadable().map(_._2.files.map(_.path)).getOrElse(Nil)
+  def manifest(): Seq[String] = manifestEntries().map(_.path)
 
   /** Full manifest incl. per-file row counts and column stats. */
-  def manifestEntries(): Seq[FileEntry] =
-    currentReadable().map(_._2.files).getOrElse(Nil)
+  def manifestEntries(): Seq[FileEntry] = readable().fold(Seq.empty[FileEntry])(_.files)
 
   /** Iceberg `<table>.files`-style metadata relation: one row per live
    *  file of the current (or a pinned) snapshot — path, size, row count,
@@ -2097,10 +1985,7 @@ class SnapshotTable private (
    *  `graft_table_files('<root>'[, version])` TVF. */
   def filesMetadata(version: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val v = version.getOrElse(currentVersion())
-    require(v >= 0, s"table $root is empty")
-    val entry = commitEntry(v)
-    entry.files.map { f =>
+    version.fold(required(readable()))(snapshotAt).files.map { f =>
       (f.path, f.rows, f.bytes,
         f.stats.map { case (c, s) =>
           c -> ColStatsRow(s.min.orNull, s.max.orNull, s.nullCount.getOrElse(-1L))
@@ -2129,25 +2014,25 @@ class SnapshotTable private (
    * applies per branch.
    */
   def readWithMeta(): DataFrame = {
-    val (cur, entry) = currentReadable().getOrElse(
-      throw new IllegalArgumentException(s"requirement failed: table $root is empty"))
+    val snap = required(readable())
+    val (cur, entry) = (snap.version, snap.entry)
     if (entry.deltaFiles.exists(_.nonEmpty)) throw new IllegalStateException(
       s"table $root has pending MoR deltas (no per-row commit lineage yet); applyDeltas() first")
-    val schema = DataType.fromJson(entry.schemaJson).asInstanceOf[StructType]
+    val schema = snap.schema
     // first-version lineage: walk retained versions ascending, first
     // parseable entry naming a path claims it (O(versions · files) driver
     // metadata work, same order as one manifest read per version)
     val first = scala.collection.mutable.LinkedHashMap[String, (Long, Option[Long])]()
     listVersions().foreach { v =>
       try {
-        val e = commitEntry(v)
+        val e = snapshotAt(v).entry
         e.files.foreach(f => if (!first.contains(f.path)) first(f.path) = (v, e.ts))
       } catch { case NonFatal(_) => () } // torn newest entry: no lineage from it
     }
     val live = entry.files.map(_.path)
     val groups = live.groupBy(p => first.getOrElse(p, (cur, entry.ts))).toSeq.sortBy(_._1._1)
     val parts = groups.map { case ((v, ts), paths) =>
-      dvRemoveOver(entry, paths, schema, mappingOf(entry)) // name-keyed: per-branch subset ok
+      readFilesAs(snap, paths, schema) // name-keyed: per-branch subset ok
         .withColumn("_commit_version", org.apache.spark.sql.functions.lit(v))
         .withColumn("_commit_ts", ts match {
           case Some(m) => org.apache.spark.sql.functions.lit(new java.sql.Timestamp(m))
@@ -2171,41 +2056,40 @@ class SnapshotTable private (
    * rows; dedup downstream by key if exact deltas are required).
    */
   def readIncremental(fromVersion: Long, toVersion: Long = Long.MaxValue): DataFrame = {
-    val (cur, entry) = currentReadable().getOrElse(
-      throw new IllegalArgumentException(s"requirement failed: table $root is empty"))
-    val to = math.min(toVersion, cur)
+    val cur = required(readable())
+    val to = math.min(toVersion, cur.version)
     // an empty (or inverted) window is a normal steady-state for streaming
     // consumers that are caught up (or started ahead of the table) — an
     // empty frame with the current schema, not a missing-log crash
-    if (fromVersion >= to)
-      return dfOver(Nil, DataType.fromJson(entry.schemaJson).asInstanceOf[StructType])
+    if (fromVersion >= to) return dfOver(Nil, cur.schema)
     // files present at `to` but not at `from` = first committed after
     // `from`; pending MoR delta files diff the same way, so deferred
     // upserts surface incrementally too (delete tombstones are filtered
     // out below — they are not representable as plain rows)
     val fromEntry =
       if (fromVersion < 0) None
-      else try Some(commitEntry(fromVersion))
+      else try Some(snapshotAt(fromVersion).entry)
       catch {
         case NonFatal(e) => throw new IllegalStateException(
           s"incremental cursor $fromVersion of $root is no longer readable " +
             "(log entry expired by vacuum?) — the consumer must re-bootstrap " +
             "from a full snapshot", e)
       }
-    val toEntry = if (to == cur) entry else commitEntry(to)
+    val toSnap = if (to == cur.version) cur else snapshotAt(to)
+    val toEntry = toSnap.entry
     // read with the schema of the version whose files are served: a later
     // overwrite may have retyped/renamed columns, and reading old files
     // through the CURRENT schema would misread them (wrong types /
     // all-null columns)
-    val schema = DataType.fromJson(toEntry.schemaJson).asInstanceOf[StructType]
+    val schema = toSnap.schema
     def newPaths(at: Seq[FileEntry], base: Option[Seq[FileEntry]]): Seq[String] = {
       val seen = base.map(_.map(_.path).toSet).getOrElse(Set.empty)
       at.map(_.path).filterNot(seen)
     }
     // rows the to-version has DV-deleted are not incremental data; filter
     // as of `toEntry` (name-keyed, so only the new files' rows are hit)
-    val dataPart = dvRemoveOver(toEntry, newPaths(toEntry.files, fromEntry.map(_.files)),
-      schema, mappingOf(toEntry))
+    val dataPart = readFilesAs(toSnap, newPaths(toEntry.files, fromEntry.map(_.files)),
+      schema)
     val deltaPaths = newPaths(toEntry.deltaFiles.getOrElse(Nil),
       fromEntry.map(_.deltaFiles.getOrElse(Nil)))
     if (deltaPaths.isEmpty) dataPart
@@ -2217,7 +2101,7 @@ class SnapshotTable private (
       // needing deletes use [[readChanges]] / readChangeFeed)
       val extSchema = StructType(schema.fields :+
         StructField(SnapshotTable.DeleteMarker, BooleanType, nullable = true))
-      val deltaPart = dfOver(deltaPaths, extSchema, mappingOf(toEntry))
+      val deltaPart = dfOver(deltaPaths, extSchema, toSnap.mapping)
         .filter(!org.apache.spark.sql.functions.coalesce(
           org.apache.spark.sql.functions.col(SnapshotTable.DeleteMarker),
           org.apache.spark.sql.functions.lit(false)))
@@ -2258,17 +2142,15 @@ class SnapshotTable private (
       keyCols: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.functions._
     require(fromVersion >= -1, s"fromVersion must be >= -1, got $fromVersion")
-    val (cur, curEntry) = currentReadable().getOrElse(
-      throw new IllegalArgumentException(s"requirement failed: table $root is empty"))
-    val to = math.min(toVersion, cur)
-    val curSchema = DataType.fromJson(curEntry.schemaJson).asInstanceOf[StructType]
-    def emptyFeed = dfOver(Nil, curSchema)
+    val cur = required(readable())
+    val to = math.min(toVersion, cur.version)
+    def emptyFeed = dfOver(Nil, cur.schema)
       .withColumn("_change_type", lit(null).cast(StringType))
       .withColumn("_commit_version", lit(null).cast(LongType))
       .withColumn("_commit_ts", lit(null).cast(TimestampType))
     if (fromVersion >= to) return emptyFeed // caught-up consumer: empty, not an error
-    def entryOf(v: Long): CommitEntry =
-      try commitEntry(v)
+    def entryOf(v: Long): Snapshot =
+      try snapshotAt(v)
       catch {
         case NonFatal(ex) => throw new IllegalStateException(
           s"change-feed version $v of $root is no longer readable (log " +
@@ -2280,7 +2162,7 @@ class SnapshotTable private (
     var prev = if (fromVersion < 0) None else Some(entryOf(fromVersion))
     val perVersion = ((fromVersion + 1) to to).map { v =>
       val e = entryOf(v)
-      val changes = versionChanges(v, prev, e, keyCols)
+      val changes = versionChanges(prev, e, keyCols)
       prev = Some(e)
       changes
     }
@@ -2290,16 +2172,14 @@ class SnapshotTable private (
 
   /** Row-level diff of one commit against its predecessor (see
    *  [[readChanges]]). */
-  private def versionChanges(v: Long, prevOpt: Option[CommitEntry],
-      ce: CommitEntry, keyCols: Seq[String]): DataFrame = {
+  private def versionChanges(prevOpt: Option[Snapshot],
+      snap: Snapshot, keyCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
-    val schema = DataType.fromJson(ce.schemaJson).asInstanceOf[StructType]
-    val prevSchema = prevOpt
-      .map(p => DataType.fromJson(p.schemaJson).asInstanceOf[StructType])
-      .getOrElse(schema)
+    val (v, ce, schema) = (snap.version, snap.entry, snap.schema)
+    val prevSchema = prevOpt.fold(schema)(_.schema)
     val keys: Seq[String] =
       if (keyCols.nonEmpty) keyCols
-      else ce.morKeys.orElse(prevOpt.flatMap(_.morKeys)).map(_.toSeq).getOrElse(
+      else ce.morKeys.orElse(prevOpt.flatMap(_.entry.morKeys)).map(_.toSeq).getOrElse(
         ce.properties.flatMap(_.get("graft.cdf.keys"))
           .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil))
     val prevFiles = prevOpt.map(_.files).getOrElse(Nil)
@@ -2307,7 +2187,7 @@ class SnapshotTable private (
     val curPaths = ce.files.map(_.path).toSet
     val removed = prevFiles.filterNot(f => curPaths(f.path))
     val added = ce.files.filterNot(f => prevPaths(f.path))
-    val prevDelta = prevOpt.flatMap(_.deltaFiles).getOrElse(Nil)
+    val prevDelta = prevOpt.flatMap(_.entry.deltaFiles).getOrElse(Nil)
     val prevDeltaPaths = prevDelta.map(_.path).toSet
     val newDelta = ce.deltaFiles.getOrElse(Nil).filterNot(f => prevDeltaPaths(f.path))
     val curDeltaPaths = ce.deltaFiles.getOrElse(Nil).map(_.path).toSet
@@ -2319,7 +2199,7 @@ class SnapshotTable private (
     // cur side under cur's — so the newly-deleted rows surface as
     // `delete` and every carried row cancels. A purge commit (rewrite +
     // DV clear) cancels the same way with no special case.
-    val prevDvPaths = prevOpt.flatMap(_.dvFiles).getOrElse(Nil).map(_.path).toSet
+    val prevDvPaths = prevOpt.flatMap(_.entry.dvFiles).getOrElse(Nil).map(_.path).toSet
     val newDv = ce.dvFiles.getOrElse(Nil).filterNot(f => prevDvPaths(f.path))
     val dvTouched: Seq[FileEntry] =
       if (newDv.isEmpty) Nil
@@ -2333,11 +2213,11 @@ class SnapshotTable private (
     val removedX = removed ++ dvTouched
     val addedX = added ++ dvTouched
     def readPrev(files: Seq[FileEntry]): DataFrame = prevOpt match {
-      case Some(p) => dvRemoveOver(p, files.map(_.path), prevSchema, mappingOf(p))
+      case Some(p) => readFilesAs(p, files.map(_.path), prevSchema)
       case None => dfOver(files.map(_.path), prevSchema)
     }
     def readCur(files: Seq[FileEntry]): DataFrame =
-      dvRemoveOver(ce, files.map(_.path), schema, mappingOf(ce))
+      readFilesAs(snap, files.map(_.path), schema)
     val diff =
       if (keys.isEmpty) {
         require(!deltasInvolved, // unreachable: MoR commits always carry morKeys
@@ -2349,16 +2229,16 @@ class SnapshotTable private (
         // name — the fold-in compaction then cancels to zero changes
         val touchedKeys =
           (Seq(dfOver((newDelta ++ removedDelta).map(_.path), schema,
-              mappingOf(ce))) ++
+              snap.mapping)) ++
             Seq(alignTo(dfOver(removed.map(_.path), prevSchema,
-                prevOpt.map(mappingOf).getOrElse(Map.empty)), schema),
-              dfOver(added.map(_.path), schema, mappingOf(ce))))
+                prevOpt.fold(Map.empty[String, String])(_.mapping)), schema),
+              dfOver(added.map(_.path), schema, snap.mapping)))
             .map(_.select(keys.map(col): _*))
             .reduce(_ unionByName _).distinct()
-        val old = prevOpt.map(p => mergedView(p, p.files))
+        val old = prevOpt.map(view)
           .getOrElse(dfOver(Nil, prevSchema))
         keyedDiff(alignTo(old, schema).join(touchedKeys, keys, "left_semi"),
-          mergedView(ce, ce.files).join(touchedKeys, keys, "left_semi"),
+          view(snap).join(touchedKeys, keys, "left_semi"),
           keys, schema)
       } else {
         keyedDiff(alignTo(readPrev(removedX), schema), readCur(addedX),
@@ -2443,7 +2323,7 @@ class SnapshotTable private (
   def history(): Seq[HistoryEntry] =
     listVersions().reverse.flatMap { v =>
       try {
-        val e = commitEntry(v)
+        val e = snapshotAt(v).entry
         Some(HistoryEntry(v, e.action, e.ts.map(new java.sql.Timestamp(_)),
           e.files.size, e.deltaFiles.map(_.size).getOrElse(0)))
       } catch { case NonFatal(_) => None }
@@ -2457,8 +2337,7 @@ class SnapshotTable private (
     val cur = currentVersion()
     require(version >= 0 && version <= cur,
       s"cannot restore $root to version $version (current: $cur)")
-    val entry = commitEntry(version)
-    writeCommit(cur + 1, entry.copy(action = s"restore-$version"))
+    writeCommit(cur + 1, snapshotAt(version).entry.copy(action = s"restore-$version"))
     this
   }
 
@@ -2481,9 +2360,8 @@ class SnapshotTable private (
    * returns 0 — no base file is touched.
    */
   def delete(predicate: Column): Int = {
-    val v = currentVersion()
-    require(v >= 0, s"table $root is empty")
-    val entry = commitEntry(v)
+    val snap = head()
+    val (v, entry) = (snap.version, snap.entry)
     // a table operating MoR (pending deltas) takes the tombstone path:
     // the CoW rewrite below would have to refuse (rewriting the BASE
     // under pending keyed deltas resurrects overridden rows), and Hudi
@@ -2491,18 +2369,18 @@ class SnapshotTable private (
     // rewritten; SQL DELETE FROM / DSv2 deleteWhere work unchanged on
     // MoR tables instead of demanding applyDeltas() first.
     if (entry.deltaFiles.exists(_.nonEmpty)) {
-      deleteDeferred(predicate, entry.morKeys.get, entry.morPrecombine.get)
+      deferDelete(snap, predicate, entry.morKeys.get, entry.morPrecombine.get, "delta-delete")
       return 0
     }
-    val tschema = DataType.fromJson(entry.schemaJson).asInstanceOf[StructType]
+    val tschema = snap.schema
     val pred = org.apache.spark.sql.graftshim.SparkInternals.expr(predicate)
     val cs = Pruning.conjuncts(pred)
     val (touched, untouched) =
       entry.files.partition(f => Pruning.mayMatchConjuncts(f, cs, tschema))
     if (touched.isEmpty) return 0
     if (entry.properties.exists(_.get("graft.dv.enabled").contains("true")))
-      return deleteWithVectors(v, entry, tschema, predicate, touched, untouched)
-    val kept = dvRemoveOver(entry, touched.map(_.path), tschema, mappingOf(entry))
+      return deleteWithVectors(snap, predicate, touched, untouched)
+    val kept = readFilesAs(snap, touched.map(_.path), tschema)
       .filter(!predicate || predicate.isNull)
     replaceFiles(untouched.map(_.path), kept, "delete", expectVersion = Some(v),
       rebasePredicate = Some(predicate),
@@ -2525,9 +2403,10 @@ class SnapshotTable private (
    * DV commit).
    */
   private def deleteWithVectors(
-      v: Long, entry: CommitEntry, tschema: StructType, predicate: Column,
+      snap: Snapshot, predicate: Column,
       touched: Seq[FileEntry], untouched: Seq[FileEntry]): Int = {
     import org.apache.spark.sql.functions._
+    val (v, entry, tschema) = (snap.version, snap.entry, snap.schema)
     val maxFraction = entry.properties.getOrElse(Map.empty)
       .get("graft.dv.maxFraction").flatMap(_.toDoubleOption).getOrElse(0.2)
     // matched positions, EXCLUDING already-DV'd rows (re-deleting a
@@ -2538,8 +2417,8 @@ class SnapshotTable private (
     // touched files. Rows are (file, pos) of matched rows only — O(rows
     // this DELETE touches), bounded per file by graft.dv.maxFraction's
     // rewrite escape; blocks release before returning.
-    val matchedPositions = dvRemove(entry,
-        dfOver(touched.map(_.path), tschema, mappingOf(entry))
+    val matchedPositions = dvRemove(snap,
+        dfOver(touched.map(_.path), tschema, snap.mapping)
           .withColumn("__del_file", col("_metadata.file_name"))
           .withColumn("__del_pos", col("_metadata.row_index")))
       .filter(predicate)
@@ -2580,7 +2459,7 @@ class SnapshotTable private (
     } else {
       // mixed commit: high-fraction files rewrite with the complement
       // (and their own prior DV rows applied); the rest take the sidecar
-      val kept = dvRemoveOver(entry, rewriteFiles.map(_.path), tschema, mappingOf(entry))
+      val kept = readFilesAs(snap, rewriteFiles.map(_.path), tschema)
         .filter(!predicate || predicate.isNull)
       val carry = untouched ++ touched.filterNot(f => rewrite.contains(new Path(f.path).getName))
       replaceFiles(carry.map(_.path), kept, "delete", expectVersion = Some(v),
@@ -2594,15 +2473,9 @@ class SnapshotTable private (
   }
 
   /** The current snapshot's deletion-vector sidecar paths. */
-  def dvManifest(): Seq[String] =
-    currentReadable().flatMap(_._2.dvFiles).map(_.map(_.path)).getOrElse(Nil)
+  def dvManifest(): Seq[String] = readable().fold(Seq.empty[String])(_.dvPaths)
 
-  /** Deletion-vector sidecars AT a version (time-travel variant). */
-  private[graft] def dvManifestAt(version: Long): Seq[String] =
-    if (version < 0) Nil
-    else commitEntry(version).dvFiles.map(_.map(_.path)).getOrElse(Nil)
-
-  /** Deleted (file name → sorted row positions) at `version`,
+  /** Deleted (file name → sorted row positions) of `snap`,
    *  materialized on the driver — the scan-side mirror of [[dvRemove]]'s
    *  broadcast anti-join, same O(deleted rows) budget: DV volume is
    *  bounded by `graft.dv.maxFraction` per file (heavier deletes rewrite
@@ -2611,8 +2484,8 @@ class SnapshotTable private (
    *  per file, which keeps the bucket layout reportable: a delete never
    *  moves a row between buckets, so KeyGroupedPartitioning (and the
    *  storage-partitioned joins it enables) survives pending DVs. */
-  private[graft] def dvPositionsAt(version: Long): Map[String, Array[Long]] = {
-    val dvs = dvManifestAt(version)
+  private[graft] def dvPositions(snap: Snapshot): Map[String, Array[Long]] = {
+    val dvs = snap.dvPaths
     if (dvs.isEmpty) Map.empty
     else {
       // cache key carries the commit SLOT FILE's identity (mtime+length),
@@ -2635,12 +2508,12 @@ class SnapshotTable private (
           }
       val slotId =
         try {
-          val st = fs.getFileStatus(new Path(logDir, f"$version%020d.json"))
+          val st = fs.getFileStatus(slotPath(snap.version))
           Some((st.getModificationTime, st.getLen))
         } catch { case NonFatal(_) => None }
       slotId match {
         case Some(id) =>
-          SnapshotTable.dvPositionsCached(logDir.toString, version, id, () => load())
+          SnapshotTable.dvPositionsCached(logDir.toString, snap.version, id, () => load())
         case None => load()
       }
     }
@@ -2655,17 +2528,16 @@ class SnapshotTable private (
    * files rewritten.
    */
   def purgeDeletionVectors(): Int = {
-    val v = currentVersion()
-    require(v >= 0, s"table $root is empty")
-    val entry = commitEntry(v)
+    val snap = head()
+    val (v, entry) = (snap.version, snap.entry)
     val dvs = entry.dvFiles.getOrElse(Nil)
     if (dvs.isEmpty) return 0
-    val tschema = DataType.fromJson(entry.schemaJson).asInstanceOf[StructType]
+    val tschema = snap.schema
     val names = spark.read.schema(SnapshotTable.DvSchema).parquet(dvs.map(_.path): _*)
       .select(SnapshotTable.DvFileCol).distinct()
       .collect().map(_.getString(0)).toSet // O(live DV'd files) driver rows
     val (touched, rest) = entry.files.partition(f => names(new Path(f.path).getName))
-    val rewritten = dvRemoveOver(entry, touched.map(_.path), tschema, mappingOf(entry))
+    val rewritten = readFilesAs(snap, touched.map(_.path), tschema)
     replaceFiles(rest.map(_.path), rewritten, "purge-dv",
       expectVersion = Some(v), clearDvFiles = true, rebaseDisjoint = true,
       commitSchemaJson = Some(entry.schemaJson))
@@ -2689,10 +2561,9 @@ class SnapshotTable private (
    * deltas are pending (fold them with [[applyDeltas]] first).
    */
   def overwriteWhere(predicate: Column, df: DataFrame): SnapshotTable = {
-    val v = currentVersion()
-    require(v >= 0, s"table $root is empty")
-    val entry = commitEntry(v)
-    val tschema = DataType.fromJson(entry.schemaJson).asInstanceOf[StructType]
+    val snap = head()
+    val (v, entry) = (snap.version, snap.entry)
+    val tschema = snap.schema
     val (aligned0, _) = alignToCommitted(df, tschema, mergeSchema = false)
     // scope guard folded into the write projection itself (the
     // enforceConstraints pattern): ONE pass — no separate validation job
@@ -2714,7 +2585,7 @@ class SnapshotTable private (
     val cs = Pruning.conjuncts(pred)
     val (touched, untouched) =
       entry.files.partition(f => Pruning.mayMatchConjuncts(f, cs, tschema))
-    val survivors = dvRemoveOver(entry, touched.map(_.path), tschema, mappingOf(entry))
+    val survivors = readFilesAs(snap, touched.map(_.path), tschema)
       .filter(!predicate || predicate.isNull)
     replaceFiles(untouched.map(_.path), survivors.unionByName(aligned),
       "replace-where", expectVersion = Some(v),
@@ -2780,10 +2651,9 @@ class SnapshotTable private (
    */
   def update(predicate: Column, set: Map[String, Column]): Int = {
     import org.apache.spark.sql.functions.{col => c, when}
-    val v = currentVersion()
-    require(v >= 0, s"table $root is empty")
-    val entry = commitEntry(v)
-    val tschema = DataType.fromJson(entry.schemaJson).asInstanceOf[StructType]
+    val snap = head()
+    val (v, entry) = (snap.version, snap.entry)
+    val tschema = snap.schema
     val byName = set.map { case (k, expr) =>
       val field = tschema.fields.find(_.name.equalsIgnoreCase(k)).getOrElse(
         throw new IllegalArgumentException(s"UPDATE $root: column $k is not in the table schema"))
@@ -2794,14 +2664,14 @@ class SnapshotTable private (
       byName.keys.foreach(k => require(!keys.exists(_.equalsIgnoreCase(k)),
         s"UPDATE $root: cannot assign record-key column $k while MoR deltas " +
           "are pending (the upsert would land under the new key); applyDeltas() first"))
-      val updated = mergedView(entry, entry.files).filter(predicate)
+      val updated = view(snap).filter(predicate)
         .select(tschema.fields.toSeq.map { f =>
           byName.get(f.name) match {
             case Some((field, nv)) => nv.cast(field.dataType).as(f.name)
             case None => c(f.name)
           }
         }: _*)
-      upsertDeferred(updated, keys, entry.morPrecombine.get, action = "delta-update")
+      deferUpsert(snap, updated, keys, entry.morPrecombine.get, "delta-update")
       return 0
     }
     val pred = org.apache.spark.sql.graftshim.SparkInternals.expr(predicate)
@@ -2810,7 +2680,7 @@ class SnapshotTable private (
       entry.files.partition(f => Pruning.mayMatchConjuncts(f, cs, tschema))
     if (touched.isEmpty) return 0
     if (entry.properties.exists(_.get("graft.dv.enabled").contains("true")))
-      return updateWithVectors(v, entry, tschema, predicate, byName, touched, untouched)
+      return updateWithVectors(snap, predicate, byName, touched, untouched)
     val cols = tschema.fields.toSeq.map { f =>
       byName.get(f.name) match {
         case Some((field, nv)) =>
@@ -2818,7 +2688,7 @@ class SnapshotTable private (
         case None => c(f.name)
       }
     }
-    val rewritten = dvRemoveOver(entry, touched.map(_.path), tschema, mappingOf(entry))
+    val rewritten = readFilesAs(snap, touched.map(_.path), tschema)
       .select(cols: _*)
     replaceFiles(untouched.map(_.path), rewritten, "update", expectVersion = Some(v),
       rebasePredicate = Some(predicate),
@@ -2837,10 +2707,11 @@ class SnapshotTable private (
    * Returns the number of files rewritten (0 = pure DV+append commit).
    */
   private def updateWithVectors(
-      v: Long, entry: CommitEntry, tschema: StructType, predicate: Column,
+      snap: Snapshot, predicate: Column,
       byName: Map[String, (StructField, Column)],
       touched: Seq[FileEntry], untouched: Seq[FileEntry]): Int = {
     import org.apache.spark.sql.functions._
+    val (v, entry, tschema) = (snap.version, snap.entry, snap.schema)
     val maxFraction = entry.properties.getOrElse(Map.empty)
       .get("graft.dv.maxFraction").flatMap(_.toDoubleOption).getOrElse(0.2)
     // matched (file, pos) pairs materialized ONCE for the counts job and
@@ -2848,8 +2719,8 @@ class SnapshotTable private (
     // projected to the two position columns before pinning, O(matched
     // rows); the reassigned-row append below is its own full-row scan
     // regardless. Blocks release before returning.
-    val matchedPositions = dvRemove(entry,
-        dfOver(touched.map(_.path), tschema, mappingOf(entry))
+    val matchedPositions = dvRemove(snap,
+        dfOver(touched.map(_.path), tschema, snap.mapping)
           .withColumn("__upd_file", col("_metadata.file_name"))
           .withColumn("__upd_pos", col("_metadata.row_index")))
       .filter(predicate)
@@ -2888,8 +2759,7 @@ class SnapshotTable private (
       }
     }
     val vectorizedFiles = vectorized.flatMap(byFileName.get)
-    val updatedRows = dvRemoveOver(entry, vectorizedFiles.map(_.path),
-        tschema, mappingOf(entry))
+    val updatedRows = readFilesAs(snap, vectorizedFiles.map(_.path), tschema)
       .filter(predicate).select(assigned: _*)
     val rewriteFiles = rewrite.flatMap(byFileName.get)
     // high-fraction files rewrite in place with the conditional CASE
@@ -2900,8 +2770,7 @@ class SnapshotTable private (
         case None => col(f.name)
       }
     }
-    val rewrittenRows = dvRemoveOver(entry, rewriteFiles.map(_.path),
-        tschema, mappingOf(entry))
+    val rewrittenRows = readFilesAs(snap, rewriteFiles.map(_.path), tschema)
       .select(caseCols: _*)
     val carry = untouched ++ vectorizedFiles ++
       touched.filterNot(f => counts.contains(new Path(f.path).getName))
@@ -2928,10 +2797,9 @@ class SnapshotTable private (
       targetFileBytes: Long = 128L * 1024 * 1024,
       smallFileBytes: Long = 32L * 1024 * 1024,
       scope: Option[Column] = None): Int = {
-    val v = currentVersion()
-    require(v >= 0, s"table $root is empty")
-    val entry = commitEntry(v)
-    val tschema = DataType.fromJson(entry.schemaJson).asInstanceOf[StructType]
+    val snap = head()
+    val (v, entry) = (snap.version, snap.entry)
+    val tschema = snap.schema
     // `scope` (OPTIMIZE … WHERE) bounds the rewrite to files whose stats
     // may match — maintenance over the hot partition of a 100 TB table
     // touches only its files, never the full manifest's
@@ -2955,7 +2823,7 @@ class SnapshotTable private (
     if (small.size < 2) return 0
     val totalBytes = small.map(_.bytes).sum
     val outFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val packed = dvRemoveOver(entry, small.map(_.path), tschema, mappingOf(entry))
+    val packed = readFilesAs(snap, small.map(_.path), tschema)
       .coalesce(outFiles)
     replaceFiles(healthy.map(_.path), packed, "compact", expectVersion = Some(v),
       numFiles = Some(outFiles), rebaseDisjoint = true,
@@ -2982,10 +2850,9 @@ class SnapshotTable private (
   def recluster(clusterBy: Seq[String], numFiles: Int): Int = {
     require(clusterBy.nonEmpty, "recluster needs at least one cluster column")
     require(numFiles >= 1, s"recluster numFiles must be >= 1, got $numFiles")
-    val v = currentVersion()
-    require(v >= 0, s"table $root is empty")
-    val entry = commitEntry(v)
-    val tschema = DataType.fromJson(entry.schemaJson).asInstanceOf[StructType]
+    val snap = head()
+    val (v, entry) = (snap.version, snap.entry)
+    val tschema = snap.schema
     // entries may be plain columns OR transforms (bucket/time) — the
     // setClusterSpec vocabulary; only the SOURCE column must exist
     clusterBy.foreach { c =>
@@ -3013,7 +2880,7 @@ class SnapshotTable private (
     // and a caller asking to split one oversized file into numFiles
     // range-clustered outputs asked for exactly that
     if (entry.files.isEmpty) return 0
-    val all = dvRemoveOver(entry, entry.files.map(_.path), tschema, mappingOf(entry))
+    val all = readFilesAs(snap, entry.files.map(_.path), tschema)
     // with a recorded spec, replaceFiles' applyCluster(numFiles) does the
     // shuffle (identity-routed for single-bucket specs, range otherwise);
     // otherwise shape the frame here
@@ -3056,12 +2923,12 @@ class SnapshotTable private (
     // retainMillis mtime window. But it must NOT count toward
     // retainVersions: with retainVersions=1 and a permanently torn head,
     // counting it would expire the older GOOD entries and reclaim the
-    // files of the last version currentReadable() still falls back to.
+    // files of the last version readable() still falls back to.
     // The retention window extends one version past a torn head instead,
     // so the newest READABLE version is always retained. An unreadable
     // OLDER entry is real corruption and throws before anything deletes.
     val headTorn =
-      try { commitEntry(versions.last); false } catch { case NonFatal(_) => true }
+      try { snapshotAt(versions.last); false } catch { case NonFatal(_) => true }
     val keep = math.max(1, retainVersions) match {
       case k if headTorn && k < Int.MaxValue => k + 1
       case k => k
@@ -3081,7 +2948,7 @@ class SnapshotTable private (
         e.dvFiles.getOrElse(Nil).map(_.path)
     val tagLive: Set[String] = listTags().flatMap { case (name, v) =>
       try {
-        val e = commitEntry(v) // slot while present, embedded copy after
+        val e = snapshotAt(v).entry // slot while present, embedded copy after
         if (versions.dropRight(keep).contains(v) &&
             tagEmbeddedEntry(tagBody(name)).isEmpty) {
           val payload =
@@ -3093,7 +2960,7 @@ class SnapshotTable private (
       } catch { case NonFatal(_) => Nil }
     }.toSet
     val live: Set[String] = versions.takeRight(keep).flatMap { v =>
-      try entryFiles(commitEntry(v))
+      try entryFiles(snapshotAt(v).entry)
       catch {
         case NonFatal(e) if v == versions.last && headTorn => Nil
       }
@@ -3163,7 +3030,7 @@ class SnapshotTable private (
     val versions = listVersions()
     if (versions.isEmpty) return Nil
     val headTorn =
-      try { commitEntry(versions.last); false } catch { case NonFatal(_) => true }
+      try { snapshotAt(versions.last); false } catch { case NonFatal(_) => true }
     val keep = math.max(1, retainVersions) match {
       case k if headTorn && k < Int.MaxValue => k + 1
       case k => k
@@ -3174,11 +3041,11 @@ class SnapshotTable private (
       e.files.map(_.path) ++ e.deltaFiles.getOrElse(Nil).map(_.path) ++
         e.dvFiles.getOrElse(Nil).map(_.path)
     val tagLive: Set[String] = listTags().flatMap { case (_, v) =>
-      try entryFiles(commitEntry(v)) catch { case NonFatal(_) => Nil }
+      try entryFiles(snapshotAt(v).entry) catch { case NonFatal(_) => Nil }
     }.toSet
     val live: Set[String] =
       versions.takeRight(keep).flatMap { v =>
-        try entryFiles(commitEntry(v))
+        try entryFiles(snapshotAt(v).entry)
         catch {
           case NonFatal(e) if v == versions.last && headTorn => Nil
         }
@@ -3212,14 +3079,10 @@ class SnapshotTable private (
    * orphan the clone's referenced files — same caveat as Delta.
    */
   def shallowCloneTo(newRoot: String, asOfVersion: Option[Long] = None): SnapshotTable = {
-    val entry = asOfVersion match {
-      // version-pinned clone (`… SHALLOW CLONE t VERSION AS OF n`):
-      // re-reference the files of that snapshot; vacuuming the source
-      // past it can orphan them — same caveat as the current-version form
-      case Some(v) => commitEntry(v)
-      case None => currentReadable().getOrElse(
-        throw new IllegalArgumentException(s"requirement failed: table $root is empty"))._2
-    }
+    // version-pinned clone (`… SHALLOW CLONE t VERSION AS OF n`):
+    // re-reference the files of that snapshot; vacuuming the source past
+    // it can orphan them — same caveat as the current-version form
+    val entry = asOfVersion.fold(required(readable()))(snapshotAt).entry
     require(entry.deltaFiles.forall(_.isEmpty),
       s"table $root has pending MoR deltas; applyDeltas() before cloning")
     val clone = new SnapshotTable(spark, newRoot)
@@ -3271,17 +3134,14 @@ class SnapshotTable private (
   def createTag(name: String, asOfVersion: Option[Long] = None): SnapshotTable = {
     requireMainHandle("createTag")
     validateRefName(name)
-    val v = asOfVersion.getOrElse {
-      val cv = currentVersion()
-      require(cv >= 0, s"table $root is empty; nothing to tag")
-      cv
-    }
+    // tag targets must be readable commits: fail here, not at read
+    val snap = asOfVersion.fold(head())(snapshotAt)
+    val (v, entry) = (snap.version, snap.entry)
     // tags and branches are separate namespaces, but `VERSION AS OF
     // '<name>'` resolves both — a name living in each would be ambiguous
     require(!hasBranch(name),
       s"a branch named '$name' exists on $root; tag and branch names share " +
         "the VERSION AS OF namespace and must not collide")
-    val entry = commitEntry(v) // tag targets must be readable commits, fail here not at read
     fs.mkdirs(tagsDir)
     // The tag carries a COPY of the commit entry (entry key LAST so it can
     // be extracted without a JSON parser): a tag is a retention promise,
@@ -3400,8 +3260,8 @@ class SnapshotTable private (
     require(!hasTag(name),
       s"a tag named '$name' exists on $root; tag and branch names share " +
         "the VERSION AS OF namespace and must not collide")
-    val (v, entry) = currentReadable().getOrElse(
-      throw new IllegalArgumentException(s"requirement failed: table $root is empty"))
+    val snap = required(readable())
+    val (v, entry) = (snap.version, snap.entry)
     require(entry.deltaFiles.forall(_.isEmpty),
       s"table $root has pending MoR deltas; applyDeltas() before branching")
     val b = new SnapshotTable(spark, root, Some(name))
@@ -3451,8 +3311,9 @@ class SnapshotTable private (
   def fastForward(name: String): SnapshotTable = {
     requireMainHandle("fastForward")
     val b = branch(name)
-    val (bv, be) = b.currentReadable().getOrElse(
+    val bs = b.readable().getOrElse(
       throw new IllegalStateException(s"branch '$name' on $root has no readable head"))
+    val (bv, be) = (bs.version, bs.entry)
     require(be.deltaFiles.forall(_.isEmpty),
       s"branch '$name' has pending MoR deltas; applyDeltas() on the branch before publishing")
     val base = b.listVersions().headOption.getOrElse(
@@ -3480,7 +3341,7 @@ class SnapshotTable private (
         val b = new SnapshotTable(spark, root, Some(name))
         b.listVersions().flatMap { v =>
           try {
-            val e = b.commitEntry(v)
+            val e = b.snapshotAt(v).entry
             e.files.map(_.path) ++ e.deltaFiles.getOrElse(Nil).map(_.path) ++
               e.dvFiles.getOrElse(Nil).map(_.path)
           } catch {
@@ -3519,36 +3380,13 @@ class SnapshotTable private (
       precombine: String,
       action: String = "delta-upsert"): SnapshotTable = {
     require(keys.nonEmpty, "upsertDeferred needs at least one record-key column")
-    val v = currentVersion()
-    require(v >= 0, s"table $root is empty")
-    val e = commitEntry(v)
-    val committed = DataType.fromJson(e.schemaJson).asInstanceOf[StructType]
-    (keys :+ precombine).foreach(k => require(
-      committed.fieldNames.exists(_.equalsIgnoreCase(k)),
-      s"upsertDeferred: column $k is not in the table schema"))
-    // config persists across folds/rewrites as table state; it only
-    // PINS the keying while deltas are actually pending (mixing keyings
-    // within one un-folded overlay is the unresolvable case) — with a
-    // clean overlay a re-key simply updates the recorded config
-    val pendingDeltas = e.deltaFiles.exists(_.nonEmpty)
-    e.morKeys.foreach(prev => require(!pendingDeltas || prev == keys.toList,
-      s"pending deltas keyed on $prev; applyDeltas() before switching to $keys"))
-    e.morPrecombine.foreach(prev => require(!pendingDeltas || prev == precombine,
-      s"pending deltas precombine on $prev; applyDeltas() before switching to $precombine"))
-    val (aligned, _) = alignToCommitted(incoming, committed, mergeSchema = false)
-    val files = writeDataDir(aligned)
-    // empty batch (e.g. a MoR-routed UPDATE whose predicate matched
-    // nothing): no-op, no commit — same contract as [[deleteDeferred]];
-    // a junk version with an unchanged delta list would pollute history
-    // and advance streaming cursors for no logical change
-    if (files.isEmpty) return this
-    writeCommit(v + 1, e.copy(action = action,
-      deltaFiles = Some(e.deltaFiles.getOrElse(Nil) ++ files),
-      morKeys = Some(keys.toList),
-      morPrecombine = Some(precombine)))
-    maybeAutoCompact(e, e.deltaFiles.getOrElse(Nil).size + files.size)
-    this
+    deferUpsert(head(), incoming, keys, precombine, action)
   }
+
+  private def deferUpsert(snap: Snapshot, incoming: DataFrame, keys: Seq[String],
+      precombine: String, action: String): SnapshotTable =
+    commitDeferred(snap, keys, precombine, action, "upsertDeferred")(
+      alignToCommitted(incoming, snap.schema, mergeSchema = false)._1)
 
   /**
    * MoR deferred DELETE (Hudi delete log-block semantics — the
@@ -3572,36 +3410,51 @@ class SnapshotTable private (
       precombine: String,
       action: String = "delta-delete"): SnapshotTable = {
     require(keys.nonEmpty, "deleteDeferred needs at least one record-key column")
-    val v = currentVersion()
-    require(v >= 0, s"table $root is empty")
-    val e = commitEntry(v)
-    val committed = DataType.fromJson(e.schemaJson).asInstanceOf[StructType]
+    deferDelete(head(), predicate, keys, precombine, action)
+  }
+
+  private def deferDelete(snap: Snapshot, predicate: Column, keys: Seq[String],
+      precombine: String, action: String): SnapshotTable =
+    commitDeferred(snap, keys, precombine, action, "deleteDeferred") {
+      // resolve against the RT view so a delete composes with pending
+      // upserts (deleting a key whose latest version exists only in a
+      // delta batch must still tombstone it)
+      val matching = view(snap).filter(predicate)
+        .select(keys.map(org.apache.spark.sql.functions.col): _*).distinct()
+      // full-width tombstone rows (payload nulls) + physical marker: one
+      // uniform read schema covers upsert and tombstone batches
+      alignTo(matching, snap.schema)
+        .withColumn(SnapshotTable.DeleteMarker, org.apache.spark.sql.functions.lit(true))
+    }
+
+  /** Check `op`'s record key and precombine against `snap`, then write
+   *  `batch` as one delta batch and commit it on top of `snap`. An empty
+   *  batch (an UPDATE or delete whose predicate matched nothing) commits
+   *  nothing: a junk version with an unchanged delta list would pollute
+   *  history, advance streaming cursors for no logical change, and pin
+   *  `keys`/`precombine` on the table's MoR state. */
+  private def commitDeferred(snap: Snapshot, keys: Seq[String], precombine: String,
+      action: String, op: String)(batch: => DataFrame): SnapshotTable = {
+    val e = snap.entry
     (keys :+ precombine).foreach(k => require(
-      committed.fieldNames.exists(_.equalsIgnoreCase(k)),
-      s"deleteDeferred: column $k is not in the table schema"))
-    // same pinning rule as [[upsertDeferred]]: the keying is only fixed
-    // while an un-folded overlay exists
+      snap.schema.fieldNames.exists(_.equalsIgnoreCase(k)),
+      s"$op: column $k is not in the table schema"))
+    // config persists across folds/rewrites as table state; it only
+    // PINS the keying while deltas are actually pending (mixing keyings
+    // within one un-folded overlay is the unresolvable case) — with a
+    // clean overlay a re-key simply updates the recorded config
     val pendingDeltas = e.deltaFiles.exists(_.nonEmpty)
     e.morKeys.foreach(prev => require(!pendingDeltas || prev == keys.toList,
       s"pending deltas keyed on $prev; applyDeltas() before switching to $keys"))
     e.morPrecombine.foreach(prev => require(!pendingDeltas || prev == precombine,
       s"pending deltas precombine on $prev; applyDeltas() before switching to $precombine"))
-    // resolve against the RT view so a delete composes with pending
-    // upserts (deleting a key whose latest version exists only in a
-    // delta batch must still tombstone it)
-    val matching = mergedView(e, e.files).filter(predicate)
-      .select(keys.map(org.apache.spark.sql.functions.col): _*).distinct()
-    // full-width tombstone rows (payload nulls) + physical marker: one
-    // uniform read schema covers upsert and tombstone batches
-    val tombstones = alignTo(matching, committed)
-      .withColumn(SnapshotTable.DeleteMarker, org.apache.spark.sql.functions.lit(true))
-    val files = writeDataDir(tombstones)
-    if (files.isEmpty) return this // nothing matched: no-op, no commit
-    writeCommit(v + 1, e.copy(action = action,
+    val files = writeDataDir(batch, Some(snap))
+    if (files.isEmpty) return this
+    writeCommit(snap.version + 1, e.copy(action = action,
       deltaFiles = Some(e.deltaFiles.getOrElse(Nil) ++ files),
       morKeys = Some(keys.toList),
       morPrecombine = Some(precombine)))
-    maybeAutoCompact(e, e.deltaFiles.getOrElse(Nil).size + files.size)
+    maybeAutoCompact(snap, e.deltaFiles.getOrElse(Nil).size + files.size)
     this
   }
 
@@ -3616,9 +3469,8 @@ class SnapshotTable private (
    * race to a concurrent writer is harmless: that writer's own deferred
    * commit re-evaluates the threshold.
    */
-  private def maybeAutoCompact(prior: CommitEntry, pendingDeltaFiles: Int): Unit = {
-    val threshold = prior.properties.getOrElse(Map.empty)
-      .get("graft.compact.maxDeltas").flatMap(_.toIntOption)
+  private def maybeAutoCompact(prior: Snapshot, pendingDeltaFiles: Int): Unit = {
+    val threshold = prior.properties.get("graft.compact.maxDeltas").flatMap(_.toIntOption)
     threshold.foreach { n =>
       if (pendingDeltaFiles > n) {
         try applyDeltas()
@@ -3628,13 +3480,7 @@ class SnapshotTable private (
   }
 
   /** Pending delta file list (empty when the table is pure CoW). */
-  def deltaManifest(): Seq[String] =
-    currentReadable().flatMap(_._2.deltaFiles).map(_.map(_.path)).getOrElse(Nil)
-
-  /** Pending delta files AT a version (time-travel variant). */
-  private[graft] def deltaManifestAt(version: Long): Seq[String] =
-    if (version < 0) Nil
-    else commitEntry(version).deltaFiles.map(_.map(_.path)).getOrElse(Nil)
+  def deltaManifest(): Seq[String] = readable().fold(Seq.empty[String])(_.deltaPaths)
 
   /**
    * MoR compaction: fold all pending deltas into the base (one CoW
@@ -3645,15 +3491,14 @@ class SnapshotTable private (
    * rewritten.
    */
   def applyDeltas(): Int = {
-    val v = currentVersion()
-    require(v >= 0, s"table $root is empty")
-    val entry = commitEntry(v)
+    val snap = head()
+    val (v, entry) = (snap.version, snap.entry)
     val deltaEntries = entry.deltaFiles.getOrElse(Nil)
     if (deltaEntries.isEmpty) return 0
-    val schema = DataType.fromJson(entry.schemaJson).asInstanceOf[StructType]
+    val schema = snap.schema
     val keys = entry.morKeys.getOrElse(Nil)
     val latest = latestDeltaRows(deltaEntries, schema, keys,
-      entry.morPrecombine.get, mappingOf(entry))
+      entry.morPrecombine.get, snap.mapping)
     val (touched, untouched) = deltaKeyRange(deltaEntries, keys, schema) match {
       case Some(p) =>
         val pe = org.apache.spark.sql.graftshim.SparkInternals.expr(p)
@@ -3661,7 +3506,7 @@ class SnapshotTable private (
         entry.files.partition(f => Pruning.mayMatchConjuncts(f, cs, schema))
       case None => (entry.files, Nil)
     }
-    val rewritten = dvRemoveOver(entry, touched.map(_.path), schema, mappingOf(entry))
+    val rewritten = readFilesAs(snap, touched.map(_.path), schema)
       .join(latest.select(keys.map(org.apache.spark.sql.functions.col): _*),
         keys, "left_anti")
       .unionByName(latest
@@ -3777,41 +3622,6 @@ object SnapshotTable {
   object occStats {
     val rebases = new java.util.concurrent.atomic.AtomicLong
     def reset(): Unit = rebases.set(0)
-  }
-
-  /** Process-wide per-commit phase accounting (diagnostics/benchmarks
-   *  only — never consulted by commit logic): wall-clock nanos summed
-   *  per phase across every commit on every thread while enabled. The
-   *  phases partition a writer's commit path into its externally
-   *  meaningful costs — `source_stage` (merge's one-time source
-   *  materialization), `discovery` (key-bounds agg + manifest probe),
-   *  `index` (merge's touched-file discovery join), `write_job` (the
-   *  Spark action computing + writing the data files, rewrite join
-   *  included), `harvest` (footer stats readback), `cas` (commit-slot
-   *  publish, lock wait included) — so a throughput
-   *  swing in a concurrency benchmark (the r14 `multi_writer` 2.9×
-   *  question) adjudicates from the artifact itself instead of by
-   *  plausibility. Disabled (the default) the seam is two branch
-   *  instructions; timers never wrap user exceptions. */
-  object commitPhases {
-    @volatile private var enabled = false
-    private val nanos =
-      new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]()
-    def reset(): Unit = { nanos.clear(); enabled = true }
-    def disable(): Unit = enabled = false
-    private[graft] def timed[T](phase: String)(f: => T): T =
-      if (!enabled) f
-      else {
-        val t0 = System.nanoTime()
-        try f
-        finally nanos.computeIfAbsent(phase,
-          _ => new java.util.concurrent.atomic.LongAdder).add(System.nanoTime() - t0)
-      }
-    /** Seconds per phase, snapshot order-stable for JSON emission. */
-    def secondsByPhase: Seq[(String, Double)] = {
-      import scala.jdk.CollectionConverters._
-      nanos.asScala.toSeq.map { case (k, v) => k -> v.sum() / 1e9 }.sortBy(_._1)
-    }
   }
 
   /** Table property holding the newline-joined, sorted list of staging
@@ -4055,10 +3865,91 @@ object SnapshotTable {
       // away ([[SnapshotTable.dvRemove]]); cleared by full rewrites and
       // by [[SnapshotTable.purgeDeletionVectors]]. Absent in pre-DV logs.
       dvFiles: Option[Seq[FileEntry]] = None) {
+    /** The committed schema, parsed once per entry (entries are cached
+     *  across operations); not part of the serialized form. */
+    @transient lazy val schema: StructType =
+      DataType.fromJson(schemaJson).asInstanceOf[StructType]
+
+    /** The logical→physical column mapping (empty = identity). */
+    def mapping: Map[String, String] = columnMapping.getOrElse(Map.empty)
+
     def toJson: String = {
       implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
       org.json4s.jackson.Serialization.write(this)
     }
+  }
+
+  /** One resolved table state: a committed `version` and its entry. Each
+   *  operation resolves exactly one (see the class doc's resolution
+   *  rule) and answers schema, files, overlays and layout from it, so no
+   *  two facts an operation acts on can come from different versions. */
+  private[graft] final case class Snapshot(version: Long, entry: CommitEntry) {
+    def schema: StructType = entry.schema
+    def mapping: Map[String, String] = entry.mapping
+    def files: Seq[FileEntry] = entry.files
+    def properties: Map[String, String] = entry.properties.getOrElse(Map.empty)
+    def clusterSpec: Seq[String] = entry.clusterBy.getOrElse(Nil)
+    def dvPaths: Seq[String] = entry.dvFiles.getOrElse(Nil).map(_.path)
+    def deltaPaths: Seq[String] = entry.deltaFiles.getOrElse(Nil).map(_.path)
+
+    /** Stats-pruned live files (all of them when `predicate` is empty) —
+     *  what [[SnapshotTable.scan]] reads and the DSv2 catalog scan hands
+     *  Spark's native parquet reader. */
+    def prunedFiles(predicate: Option[Column]): Seq[FileEntry] = predicate match {
+      case None => files
+      case Some(p) =>
+        val cs = Pruning.conjuncts(org.apache.spark.sql.graftshim.SparkInternals.expr(p))
+        files.filter(f => Pruning.mayMatchConjuncts(f, cs, schema))
+    }
+
+    /** Paths among `among` (default: every live file) that may contain at
+     *  least one of `keys` in `column` — the Hudi bloom-index "tagging"
+     *  step (`hoodie.index.type=BLOOM`) that keyed MERGE discovery uses
+     *  to touch only key-hit files. Per key, the stats-domain value and
+     *  the two bloom hash passes compute once ([[Pruning.prepKeyProbes]]);
+     *  each file then pays a range check plus a filter probe per key with
+     *  early exit on the first possible hit. Strictly sharper than one
+     *  global [min(keys), max(keys)] overlap test: scattered keys prune
+     *  the gap files too, and manifest blooms prune files whose key range
+     *  fully overlaps (interleaved clustering). Conservative everywhere —
+     *  files without stats or filters always stay. */
+    def keyProbedPaths(column: String, keys: Seq[Any],
+        among: Seq[FileEntry] = files): Seq[String] = {
+      // ZERO keys match zero files — without this, the empty set falls
+      // into the conservative no-usable-probes branch below and returns
+      // every file, turning a no-collision probe (the steady state of an
+      // all-novel ingest batch) into a whole-index scan per call
+      if (keys.isEmpty) return Nil
+      val probes = resolveField(schema, column)
+        .map(f => Pruning.prepKeyProbes(keys, f.dataType)).getOrElse(Nil)
+      if (probes.isEmpty) among.map(_.path)
+      else among
+        .filter(f => Pruning.fileMayContainAnyKey(f, column, probes, schema))
+        .map(_.path)
+    }
+
+    /** Some((numBuckets, key columns, sub-partition entries)) when this
+     *  snapshot is a CLEAN identity-routed bucket layout: the cluster
+     *  spec is one leading bucket transform (single- or composite-key)
+     *  and EVERY live file records a valid bucket id (written through the
+     *  routed write path) with a known size, and no MoR deltas ride the
+     *  commit. This is the precondition for the DSv2 scan to report
+     *  KeyGroupedPartitioning (storage-partitioned join); any file
+     *  predating the layout — or a pending delta overlay, whose keyed
+     *  merge is not a per-file operation — degrades to an unreported
+     *  scan (a shuffle plan, never a wrong answer). Deletion vectors do
+     *  NOT un-report the layout: the DSv2 scan applies DV positions per
+     *  file inside its readers ([[SnapshotTable.dvPositions]]), and a
+     *  delete never moves a row between buckets, so the grouping stays
+     *  exact — a long-lived bucketed fact table keeps its shuffle-free
+     *  joins while carrying DVs (Iceberg's positional-delete + SPJ
+     *  behavior). */
+    def bucketLayout: Option[(Int, Seq[String], Seq[String])] =
+      ClusterTransform.routedSpec(clusterSpec).filter { case (n, _, _) =>
+        files.nonEmpty &&
+          files.forall(f => f.bytes > 0 && f.bucket.exists(b => b >= 0 && b < n)) &&
+          entry.deltaFiles.forall(_.isEmpty)
+      }
   }
 
   private[graft] object CommitEntry {

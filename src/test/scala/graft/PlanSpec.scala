@@ -645,7 +645,7 @@ class PlanSpec extends SparkSpec {
     assert(names.distinct.size === names.size,
       s"file-name collision in hybrid manifest: $names")
     assert(t.dvManifest().nonEmpty, "delete did not land as a deletion vector")
-    assert(t.bucketLayoutAt(t.currentVersion())
+    assert(t.head().bucketLayout
       === Some((4, Seq("ent"), Seq("day"))))
     val q = "SELECT f.ent, f.day, f.v, d.w FROM graft.db.hdv_fact f " +
       "JOIN graft.db.hdv_dim d ON f.ent = d.ent AND f.day = d.day"
@@ -671,10 +671,10 @@ class PlanSpec extends SparkSpec {
     }
     // purge folds the DVs; compact + update keep the layout reportable
     t.purgeDeletionVectors()
-    assert(t.bucketLayoutAt(t.currentVersion())
+    assert(t.head().bucketLayout
       === Some((4, Seq("ent"), Seq("day"))))
     t.update(col("ent") === 11L, Map("v" -> lit(0L)))
-    assert(t.bucketLayoutAt(t.currentVersion())
+    assert(t.head().bucketLayout
       === Some((4, Seq("ent"), Seq("day"))),
       "CoW update lost the hybrid layout")
     withConfs(

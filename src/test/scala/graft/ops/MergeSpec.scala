@@ -371,7 +371,7 @@ class MergeSpec extends SparkSpec {
     val src = Seq((1500L, "B"), (1600L, "B")).toDF("id", "v")
     // the staged keys live entirely in the middle file
     val (candidates, bounds) = MergeInto.discoveryCandidates(
-      t, src, col("t.id") === col("s.id"), t.manifest())
+      t.head(), src, col("t.id") === col("s.id"))
     assert(candidates.size === 1, s"got ${candidates.size} candidates")
     assert(bounds.isDefined, "equi-key merge must expose a rebase bounds predicate")
     // and the merge itself stays correct
@@ -382,7 +382,7 @@ class MergeSpec extends SparkSpec {
     // key can match null target keys anywhere)
     val nullSrc = Seq((Some(1500L), "x"), (Option.empty[Long], "y")).toDF("id", "v")
     val (c2, b2) = MergeInto.discoveryCandidates(
-      t, nullSrc, col("t.id") <=> col("s.id"), t.manifest())
+      t.head(), nullSrc, col("t.id") <=> col("s.id"))
     assert(c2.size === t.manifest().size)
     assert(b2.isEmpty, "null-keyed null-safe source must not offer a rebase predicate")
   }
@@ -401,13 +401,12 @@ class MergeSpec extends SparkSpec {
       (260L, "𐀀", "SUPP"), (261L, "￿", "BMP"))
       .toDF("id", "s", "v")
     val cond = col("t.id") === col("s.id") && col("t.s") === col("s.s")
-    val all = t.manifest()
     // fast path (source under the key budget) vs agg path (budget forced
     // under the row count, which also caps the key probe)
-    val ((cFast, bFast), smallF) = MergeInto.discoveryCandidatesSized(t, src, cond, all)
+    val ((cFast, bFast), smallF) = MergeInto.discoveryCandidatesSized(t.head(), src, cond)
     assert(smallF === Some(4L), "4-row source must take the driver fast path")
     val ((cAgg3, bAgg), smallA) =
-      MergeInto.discoveryCandidatesSized(t, src, cond, all, maxKeys = 3)
+      MergeInto.discoveryCandidatesSized(t.head(), src, cond, maxKeys = 3)
     assert(smallA.isEmpty, "over-budget source must take the agg path")
     // candidate sets agree up to the key-probe refinement the tiny cap
     // disabled: fast-path candidates are a subset of the agg path's
@@ -493,7 +492,7 @@ class MergeSpec extends SparkSpec {
       Seq((0.0, "zero"), (5.5, "five")).toDF("k", "v"))
     val cond = col("t.k") === col("s.k")
     val src = Seq((-0.0, "ZERO")).toDF("k", "v")
-    val (_, small) = MergeInto.discoveryCandidatesSized(t, src, cond, t.manifest())
+    val (_, small) = MergeInto.discoveryCandidatesSized(t.head(), src, cond)
     assert(small.isEmpty, "double-keyed source must not take the driver fast path")
     t.merge(src, cond).whenMatched().updateAll().execute()
     assert(t.read().filter(col("v") === "ZERO").count() === 1L,

@@ -109,7 +109,7 @@ class BucketFunctionSpec extends SparkSpec {
         assert(got === Seq(f.bucket.get),
           s"trial $trial: file stamped ${f.bucket} holds buckets $got")
       }
-      assert(t.bucketLayoutAt(t.currentVersion()).contains((n, Seq("k"), Nil)))
+      assert(t.head().bucketLayout.contains((n, Seq("k"), Nil)))
       // content preserved through the routed write + append
       assert(t.read().count() === rows + df.filter(col("v") % 3 === 0).count())
     }

@@ -419,11 +419,11 @@ class MaintenanceSqlSpec extends SparkSpec {
     // the in-place SPJ migration, all in SQL: flip the spec
     // (metadata-only), then one full rewrite makes the layout eligible
     spark.sql("ALTER TABLE maint_full CLUSTER BY (bucket(4, id))")
-    assert(t.bucketLayoutAt(t.currentVersion()).isEmpty)
+    assert(t.head().bucketLayout.isEmpty)
     val out = spark.sql("OPTIMIZE maint_full FULL").collect()
     assert(out.head.getString(1).startsWith("recluster(bucket(4, id)"))
     assert(out.head.getInt(2) === 5)
-    assert(t.bucketLayoutAt(t.currentVersion()) === Some((4, Seq("id"), Nil)))
+    assert(t.head().bucketLayout === Some((4, Seq("id"), Nil)))
     assert(t.read().count() === 400)
   }
 
@@ -438,9 +438,9 @@ class MaintenanceSqlSpec extends SparkSpec {
     t.overwrite(df.repartition(5))
     GraftCatalog.register("maint_hyb", t)
     spark.sql("ALTER TABLE maint_hyb CLUSTER BY (bucket(4, ent), day)")
-    assert(t.bucketLayoutAt(t.currentVersion()).isEmpty)
+    assert(t.head().bucketLayout.isEmpty)
     spark.sql("OPTIMIZE maint_hyb FULL")
-    assert(t.bucketLayoutAt(t.currentVersion())
+    assert(t.head().bucketLayout
       === Some((4, Seq("ent"), Seq("day"))))
     // every live file single-valued on day (the tuple the scan derives)
     val schema = t.schema

@@ -61,18 +61,18 @@ class BloomFilterSpec extends SparkSpec {
     // a fresh handle re-parses the manifest JSON — filters must round-trip
     val t2 = SnapshotTable(spark, t.root)
     val v = t2.currentVersion()
-    val hit = t2.prunedFilesAt(v, Some(col("k") === "key123"))
+    val hit = t2.snapshotAt(v).prunedFiles(Some(col("k") === "key123"))
     assert(hit.size < entries.size, "bloom must skip files min/max cannot")
     assert(t2.scan(col("k") === "key123").select("n").as[Int].collect().toSeq === Seq(123))
 
     // absent key: (deterministic data ⇒ deterministic result) nearly all
     // files are bloom-negative; correctness regardless
-    val miss = t2.prunedFilesAt(v, Some(col("k") === "no_such_key"))
+    val miss = t2.snapshotAt(v).prunedFiles(Some(col("k") === "no_such_key"))
     assert(miss.size <= 1, s"expected ≤1 false-positive file, got ${miss.size}")
     assert(t2.scan(col("k") === "no_such_key").count() === 0)
 
     // IN lists probe per value
-    val inFiles = t2.prunedFilesAt(v,
+    val inFiles = t2.snapshotAt(v).prunedFiles(
       Some(col("k").isin("key123", "key456")))
     assert(inFiles.size < entries.size)
     assert(t2.scan(col("k").isin("key123", "key456")).count() === 2)
@@ -82,7 +82,7 @@ class BloomFilterSpec extends SparkSpec {
     val after = t2.manifestEntries()
     assert(after.size >= 5) // 4 original files + the appended file(s)
     assert(after.forall(_.blooms.exists(_.contains("k"))))
-    val freshHit = t2.prunedFilesAt(t2.currentVersion(), Some(col("k") === "fresh1"))
+    val freshHit = t2.head().prunedFiles(Some(col("k") === "fresh1"))
     assert(freshHit.size <= 2, "old files must be bloom-skipped for a fresh key")
     assert(t2.scan(col("k") === "fresh1").count() === 1)
   }
@@ -97,11 +97,11 @@ class BloomFilterSpec extends SparkSpec {
       .repartition(4, col("id")))
     val v = t.currentVersion()
     // an Int literal against the Long column must hash in the Long domain
-    val one = t.prunedFilesAt(v, Some(col("id") === lit(7919)))
+    val one = t.snapshotAt(v).prunedFiles(Some(col("id") === lit(7919)))
     assert(one.size < 4)
     assert(t.scan(col("id") === lit(7919)).count() >= 1)
     // a fractional literal can't represent exactly: bloom must NOT prune
-    assert(t.prunedFilesAt(v, Some(col("id") === lit(0.5))).nonEmpty ||
+    assert(t.snapshotAt(v).prunedFiles(Some(col("id") === lit(0.5))).nonEmpty ||
       t.scan(col("id") === lit(0.5)).count() === 0)
     // no filter on v: equality on it keeps all files (stats may prune, so
     // just check correctness)

@@ -23,7 +23,7 @@ class SnapshotTableSpec extends SparkSpec {
       spark.range(0, 8000).toDF("id").withColumn("v", col("id") * 2)
         .repartitionByRange(8, col("id")).sortWithinPartitions("id"))
     val v = t.currentVersion()
-    val files = t.prunedFilesAt(v, None)
+    val files = t.snapshotAt(v).files
     assert(files.size === 8)
     val schema = t.read().schema
     def prune(keys: Seq[Long], cap: Int) =
@@ -378,9 +378,14 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   test("torn newest commit: readers fall back to the prior version") {
-    val root = tmpDir("tbl")
-    val t = SnapshotTable.create(spark, root, Seq((1, "a")).toDF("id", "v"))
-    t.append(Seq((2, "b")).toDF("id", "v"))
+    // under the catalog warehouse, so the SQL face resolves the same
+    // table; the cluster spec makes clusterSpec() and DESCRIBE's
+    // partitioning observable
+    val root = spark.conf.get("spark.sql.catalog.graft.warehouse") + "/db/torn_head"
+    val t = SnapshotTable.createEmpty(spark, root,
+      new org.apache.spark.sql.types.StructType().add("id", "int").add("v", "string"),
+      clusterBy = Seq("id"))
+    t.append(Seq((1, "a"), (2, "b")).toDF("id", "v"))
     // simulate a non-local-FS writer that claimed slot 2 but whose content
     // write is still in flight: truncated JSON in the newest slot
     val full = java.nio.file.Files.readString(
@@ -393,6 +398,21 @@ class SnapshotTableSpec extends SparkSpec {
     assert(t.manifest().nonEmpty)
     assert(t.schema.fieldNames.toSeq === Seq("id", "v"))
     assert(t.scan(col("id") === 1).count() === 1)
+    // every read-only API serves version 1, not only the ones above
+    val v1 = t.snapshotAt(1)
+    val pruned = t.prunedManifest(col("id") === 1)
+    assert(pruned.nonEmpty && pruned === v1.prunedFiles(Some(col("id") === 1)).map(_.path))
+    val probed = t.keyProbedManifest("id", Seq(1))
+    assert(probed.nonEmpty && probed === v1.keyProbedPaths("id", Seq(1)))
+    assert(t.clusterSpec() === Seq("id"))
+    assert(t.filesMetadata().select("path").as[String].collect().toSeq === v1.files.map(_.path))
+    // the SQL face resolves the same fallback: DESCRIBE reports the
+    // partitioning, SELECT the rows
+    val desc = spark.sql("DESCRIBE TABLE graft.db.torn_head")
+      .collect().map(_.mkString(" ")).mkString("\n")
+    assert(desc.contains("# Partition Information"), desc)
+    assert(spark.sql("SELECT id, v FROM graft.db.torn_head").as[(Int, String)].collect().toSet ===
+      Set((1, "a"), (2, "b")))
   }
 
   test("compact bin-packs small files, content unchanged, healthy files kept") {
@@ -488,17 +508,17 @@ class SnapshotTableSpec extends SparkSpec {
       assert(got === Seq(f.bucket.get),
         s"file ${f.path} stamped ${f.bucket} but holds buckets $got")
     }
-    assert(t.bucketLayoutAt(t.currentVersion()) === Some((8, Seq("id"), Nil)))
+    assert(t.head().bucketLayout === Some((8, Seq("id"), Nil)))
     // appends route too — the layout survives growth
     t.append(spark.range(2000, 2100).select(col("id"), (col("id") * 2).as("v")))
-    assert(t.bucketLayoutAt(t.currentVersion()) === Some((8, Seq("id"), Nil)))
+    assert(t.head().bucketLayout === Some((8, Seq("id"), Nil)))
     assert(t.read().count() === 2100)
     // compaction rewrites through the same routed path — the layout
     // (and SPJ eligibility) survives maintenance
     val compacted = t.compact(targetFileBytes = 1024 * 1024,
       smallFileBytes = 1024 * 1024)
     assert(compacted > 0)
-    assert(t.bucketLayoutAt(t.currentVersion()) === Some((8, Seq("id"), Nil)))
+    assert(t.head().bucketLayout === Some((8, Seq("id"), Nil)))
     assert(t.commitEntry(t.currentVersion()).files.forall(_.bucket.isDefined))
     // a DV overlay no longer un-reports the layout: the DSv2 scan
     // applies sidecar positions per file (a delete never moves a row
@@ -507,7 +527,7 @@ class SnapshotTableSpec extends SparkSpec {
     t.setProperties(Map("graft.dv.enabled" -> "true"))
     t.delete(col("id") === 42L)
     assert(t.dvManifest().nonEmpty, "delete did not land as a deletion vector")
-    assert(t.bucketLayoutAt(t.currentVersion()) === Some((8, Seq("id"), Nil)))
+    assert(t.head().bucketLayout === Some((8, Seq("id"), Nil)))
   }
 
   test("bucket layout survives upsert, CoW delete and compaction (durable SPJ)") {
@@ -521,17 +541,17 @@ class SnapshotTableSpec extends SparkSpec {
     val t = SnapshotTable.create(spark, tmpDir("tbl_spj_dml"), df.limit(1))
     t.setClusterSpec(Seq("bucket(4, id)"))
     t.overwrite(df)
-    assert(t.bucketLayoutAt(t.currentVersion()) === Some((4, Seq("id"), Nil)))
+    assert(t.head().bucketLayout === Some((4, Seq("id"), Nil)))
     t.upsert(spark.range(100, 200)
       .select(col("id"), lit("v1").as("v"), lit(1L).as("ver")),
       Seq("id"), "ver")
-    assert(t.bucketLayoutAt(t.currentVersion()) === Some((4, Seq("id"), Nil)),
+    assert(t.head().bucketLayout === Some((4, Seq("id"), Nil)),
       "upsert destroyed the layout")
     t.delete(col("id") % 10 === 3)
-    assert(t.bucketLayoutAt(t.currentVersion()) === Some((4, Seq("id"), Nil)),
+    assert(t.head().bucketLayout === Some((4, Seq("id"), Nil)),
       "CoW delete destroyed the layout")
     t.compact(targetFileBytes = 1024 * 1024, smallFileBytes = 1024 * 1024)
-    assert(t.bucketLayoutAt(t.currentVersion()) === Some((4, Seq("id"), Nil)),
+    assert(t.head().bucketLayout === Some((4, Seq("id"), Nil)),
       "compaction destroyed the layout")
     // content stayed right through it all
     assert(t.read().count() === 900)
@@ -546,12 +566,12 @@ class SnapshotTableSpec extends SparkSpec {
     val t = SnapshotTable.create(spark, tmpDir("tbl_spj_mig"), df.limit(1))
     t.overwrite(df.repartition(5))
     t.append(df.filter(col("id") < 50).repartition(2))
-    assert(t.bucketLayoutAt(t.currentVersion()).isEmpty)
+    assert(t.head().bucketLayout.isEmpty)
     t.setClusterSpec(Seq("bucket(4, id)")) // metadata-only: still ineligible
-    assert(t.bucketLayoutAt(t.currentVersion()).isEmpty)
+    assert(t.head().bucketLayout.isEmpty)
     val before = t.read().as[(Long, Long)].collect().toSeq.sorted
     assert(t.recluster(Seq("bucket(4, id)"), 4) > 0)
-    assert(t.bucketLayoutAt(t.currentVersion()) === Some((4, Seq("id"), Nil)))
+    assert(t.head().bucketLayout === Some((4, Seq("id"), Nil)))
     assert(t.read().as[(Long, Long)].collect().toSeq.sorted === before)
     // every migrated file single-bucket
     t.commitEntry(t.currentVersion()).files.foreach { f =>
@@ -571,13 +591,13 @@ class SnapshotTableSpec extends SparkSpec {
     val t = SnapshotTable.create(spark, tmpDir("tbl_idgate"), df.limit(1))
     t.setClusterSpec(Seq("bucket(4, k)"))
     t.overwrite(df)
-    assert(t.bucketLayoutAt(t.currentVersion()).isDefined)
+    assert(t.head().bucketLayout.isDefined)
     t.setProperties(Map("graft.generated.k" -> "id % 5"))
     t.append(spark.range(100, 200).select(col("id"), (col("id") % 5).as("k")))
     val entry = t.commitEntry(t.currentVersion())
     assert(entry.files.exists(_.bucket.isEmpty),
       "generated-column write was stamped")
-    assert(t.bucketLayoutAt(t.currentVersion()).isEmpty,
+    assert(t.head().bucketLayout.isEmpty,
       "poisoned layout still reported")
   }
 
@@ -703,7 +723,7 @@ class SnapshotTableSpec extends SparkSpec {
     // a writer died mid-publish: the newest log entry is permanently
     // torn. vacuum(retainVersions=1) must NOT count the torn head toward
     // the retention window — doing so would expire the older GOOD entry
-    // and reclaim the very files currentReadable() still falls back to.
+    // and reclaim the very files readable() still falls back to.
     val root = tmpDir("tbl")
     val t = SnapshotTable(spark, root)
     t.overwrite(Seq((1, "a")).toDF("id", "v"))
@@ -1629,25 +1649,26 @@ class SnapshotTableSpec extends SparkSpec {
     assert(t.read().select("id").as[Int].collect().toSet === (0 to n).toSet)
   }
 
-  test("commitPhases attributes a keyed upsert's commit path") {
+  test("PhaseLog attributes a keyed upsert's commit path") {
+    import graft.ext.PhaseLog
     val t = SnapshotTable.create(spark, tmpDir("phases"),
       spark.range(0, 1000).selectExpr("id", "CAST(id AS STRING) AS v", "0L AS ver"))
-    SnapshotTable.commitPhases.reset()
-    try {
-      t.upsert(spark.range(0, 100)
-        .selectExpr("id", "'new' AS v", "1L AS ver"), Seq("id"), "ver")
-      val phases = SnapshotTable.commitPhases.secondsByPhase.toMap
-      // the upsert's commit path decomposes into exactly these seams —
-      // each must record non-zero wall so the multi_writer bench's
-      // phase_coverage is attribution, not an empty map summing to zero
-      for (p <- Seq("source_stage", "discovery", "index", "write_job",
-          "harvest", "cas"))
-        assert(phases.get(p).exists(_ > 0), s"phase $p missing from $phases")
-    } finally SnapshotTable.commitPhases.disable()
-    // disabled (the default): further commits record nothing
-    val before = SnapshotTable.commitPhases.secondsByPhase.toMap
+    val (_, timed) = PhaseLog.capture(t.upsert(spark.range(0, 100)
+      .selectExpr("id", "'new' AS v", "1L AS ver"), Seq("id"), "ver"))
+    val phases = timed.groupMapReduce(_._1)(_._2)(_ + _)
+    // the upsert's commit path decomposes into exactly these seams —
+    // each must record non-zero wall so the multi_writer bench's
+    // phase_coverage is attribution, not an empty map summing to zero
+    for (p <- Seq("source_stage", "discovery", "index", "write_job",
+        "harvest", "cas"))
+      assert(phases.get(p).exists(_ > 0), s"phase $p missing from $phases")
+    // outside a capture commits record nothing: the next capture starts empty
     t.append(spark.range(1000, 1010).selectExpr("id", "'x' AS v", "2L AS ver"))
-    assert(SnapshotTable.commitPhases.secondsByPhase.toMap === before)
+    assert(PhaseLog.capture(())._2.isEmpty)
+    // a phase that throws still records its time (failed attempts count)
+    val (_, failed) = PhaseLog.capture(intercept[IllegalStateException](
+      PhaseLog.timed("cas")(throw new IllegalStateException("lost the slot"))))
+    assert(failed.map(_._1) === Seq("cas"))
   }
 
   test("file stat derivations refuse ambiguous case-insensitive columns") {
